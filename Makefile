@@ -1,7 +1,7 @@
 # Entry points for the datamunging_spark engine.
 PY ?= python
 
-.PHONY: test correctness fuzz fuzz-streaming bench scaling scaling-gated
+.PHONY: test correctness fuzz fuzz-streaming bench perfbench scaling scaling-gated
 
 # Differential fuzzing: engine vs DuckDB oracle on randomized HOSTILE
 # corpora (empty texts, zero vectors, duplicates, unicode) — catches
@@ -29,6 +29,12 @@ correctness:
 
 bench:
 	$(PY) bench.py
+
+# The benchmark's own tests, then one untraced ocr_pipeline run (prints the
+# run conditions and one JSON result line; see perfbench/README.md)
+perfbench:
+	$(PY) -m pytest perfbench/test_perfbench.py -q -p no:cacheprovider
+	$(PY) perfbench/run.py --workload ocr_pipeline --seed 1 --seconds 5 --trace 0
 
 scaling:
 	$(PY) scaling_bench.py

@@ -1,187 +1,172 @@
 """Monster-document chunking (SURVEY.md §4 item 1 / §7 hard part 3).
 
 A single document row with 10^4+ spans is DATA skew inside one task —
-AQE cannot split a row, so one straggler task pins a whole stage. This
-operator processes oversized documents in bounded chunks with byte-exact
-whole-document semantics:
+AQE cannot split a row, so one straggler task pins a whole stage. Every
+document therefore passes through the same three JVM-side steps around
+the one Python pass (``operators.munge.munge``):
 
-- spans are exploded (JVM-side) and assigned to chunks of
-  ``chunk_pages`` pages; media spans ride with their preceding page;
-- each chunk also receives a ±2-page HALO from its neighbors — the
-  header/footer detector (R3) is the only cross-page stage and its
-  window is exactly ±2, so halo pages give every owned page its full
-  comparison context; halo pages emit no output;
-- chunks are processed by the same ``_Munger.munge_pages`` the
-  whole-doc operator uses, via ``applyInPandas`` grouped on
-  (doc_id, chunk) — so a 10^5-span monster becomes many independent
-  tasks;
-- results are reassembled with ``array_sort(collect_list(struct(...)))``
-  (JVM-side) and per-chunk metrics are summed.
+- **split** (``split_chunks``): a normal document becomes one chunk row
+  ``(doc_id, row, chunk=0, spans, lo=0, hi=0)``, ``row`` an id of its
+  input row. A monster (more than ``monster_threshold`` spans) becomes
+  one row per ``chunk_pages`` pages: the spans it owns (media spans ride
+  with their preceding page; media before the first page belong to chunk
+  0), plus up to ``HALO`` page-only spans from each neighbour.
+  ``lo``/``hi`` count those halo pages. The header/footer detector (R3)
+  is the only cross-page stage and its window is exactly ±2 pages, so the
+  halo gives every owned page its full comparison context; halo pages
+  emit no output;
+- **shuffle**: the caller's repartition hashes the chunk rows on
+  ``(doc_id, chunk)`` (``run_pipeline`` adds its salt), so a 10^5-span
+  monster becomes many independent tasks. The repartition is
+  explicit because chunk rows are few BYTES but much CPU: AQE coalesces
+  exchanges by byte size, and left to itself it folds every chunk of a
+  monster into one task. A user repartition is never coalesced.
+  ``partition_id`` is taken right after it, so it names the munge task;
+- **munge**: one ``mapInArrow`` runs ``_Munger.munge_doc`` on every row,
+  chunk or whole document alike;
+- **reassemble** (``reassemble``): one ``groupBy(doc_id, row)`` puts the
+  owned spans back in chunk order and sums the per-chunk metrics. Keying
+  on the input row keeps one output row per input row, so input rows
+  that share a ``doc_id`` (a file ingested twice) are not merged.
 
-``munge_auto`` routes: normal docs take the single-pass mapInArrow
-operator; only docs above ``monster_threshold`` spans pay the two extra
-shuffles. Equality of the two paths is pytest-asserted on monster docs.
+All of a document's chunk structs are built in ONE projection from the
+page-position array and then ``inline_outer``-d, so the generator carries
+only ``doc_id`` and ``row``; a generator that carried ``spans`` on every
+row it emits is quadratic in the monster's size. ``inline_outer``, not
+``inline``: for a non-outer generator the optimizer infers a
+``size(chunks) > 0`` filter and pushes it below the projections with the
+whole chunk expression substituted in, which recomputes the page
+positions once per chunk (quadratic again). The chunk array is never
+empty, so the two agree.
+
+Equality with the whole-document operator and the oracle is
+pytest-asserted (tests/test_chunked.py).
 """
 
 from __future__ import annotations
 
-import time
-from typing import Iterator
+from typing import Callable
 
-import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-from pyspark.sql.window import Window as W
-
-from ..rulesets.loader import broadcast_rulesets
-from .munge import METRIC_FIELDS, OUTPUT_SCHEMA, _Munger, munge
+from .munge import METRIC_FIELDS, munge
 
 HALO = 2  # must equal the R3 comparison window (SPEC.md §3)
-
-_CHUNK_ROWS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("pos", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-    ]
-    + [T.StructField(f, T.LongType()) for f in METRIC_FIELDS]
-    + [T.StructField("munge_us", T.LongType())]
-)
+# Docs with more spans than this are split into chunks. Outputs are the
+# same at any threshold; only the task sizes change.
+MONSTER_THRESHOLD = 256
+CHUNK_PAGES = 64
 
 
-def _make_chunk_fn(rulesets_bc):
-    def chunk_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        munger = _Munger(rulesets_bc.value)
-        pdf = pdf.sort_values("pos").reset_index(drop=True)
-        t0 = time.monotonic()
-        is_page = pdf["kind"] == "page"
-        page_rows = pdf[is_page]
-        owned_mask = [not h for h in page_rows["is_halo"]]
-        texts, per_page = munger.munge_pages(
-            list(page_rows["text"]), owned=owned_mask
+def split_chunks(df: DataFrame, monster_threshold: int, chunk_pages: int) -> DataFrame:
+    """(doc_id, spans) -> chunk rows (doc_id, row, chunk, spans, lo, hi)."""
+    cp = chunk_pages
+    spans = F.col("spans")
+    pp = F.col("pp")  # 0-based positions of the page spans
+    n_pages = F.size(pp)
+    n_spans = F.size(spans)
+    n_chunks = F.greatest(F.ceil(n_pages / cp).cast("int"), F.lit(1))
+
+    def halo(positions: Column) -> Column:
+        return F.transform(positions, lambda k: F.get(spans, k))
+
+    def chunk(c: Column) -> Column:
+        # chunk c owns pages [first, end) and the spans from its first page
+        # (span 0 for chunk 0) up to the next chunk's first page
+        first = c * cp
+        end = F.least(first + cp, n_pages)
+        start = F.when(c == 0, 0).otherwise(F.get(pp, first))
+        stop = F.when(end == n_pages, n_spans).otherwise(F.get(pp, end))
+        low = F.slice(pp, F.greatest(first - HALO, F.lit(0)) + 1, F.least(first, F.lit(HALO)))
+        high = F.slice(pp, end + 1, F.least(n_pages - end, F.lit(HALO)))
+        return F.struct(
+            c.alias("chunk"),
+            F.concat(halo(low), F.slice(spans, start + 1, stop - start), halo(high)).alias("spans"),
+            F.size(low).alias("lo"),
+            F.size(high).alias("hi"),
         )
-        elapsed_us = int((time.monotonic() - t0) * 1e6)
 
-        out = pdf[~pdf["is_halo"]].copy()
-        # rewrite owned page texts in order
-        owned_page_pos = page_rows[~page_rows["is_halo"]]["pos"].tolist()
-        text_by_pos = dict(zip(owned_page_pos, texts))
-        metrics_by_pos = dict(zip(owned_page_pos, per_page))
-        out["text"] = [
-            text_by_pos.get(p, txt) for p, txt in zip(out["pos"], out["text"])
-        ]
-        n = len(out)
-        for f in METRIC_FIELDS:
-            out[f] = pd.Series(
-                [metrics_by_pos.get(p, {}).get(f, 0) for p in out["pos"]],
-                index=out.index,
-                dtype="int64",
-            )
-        # attribute chunk wall time to its first owned row (sums per doc)
-        out["munge_us"] = pd.Series(
-            [elapsed_us] + [0] * (n - 1) if n else [], index=out.index, dtype="int64"
+    whole = F.array(F.struct(
+        F.lit(0).alias("chunk"), spans.alias("spans"), F.lit(0).alias("lo"), F.lit(0).alias("hi")
+    ))
+    chunks = F.when(
+        n_spans > monster_threshold,
+        F.transform(F.sequence(F.lit(0), n_chunks - 1), chunk),
+    ).otherwise(whole)
+    page_positions = F.filter(
+        F.transform(spans, lambda s, i: F.when(s["kind"] == "page", i)),
+        lambda i: i.isNotNull(),
+    )
+    return (
+        df.select(
+            "doc_id",
+            F.monotonically_increasing_id().alias("row"),
+            "spans",
+            page_positions.alias("pp"),
         )
-        return out.drop(columns=["chunk", "is_halo", "page_idx"])
+        .select("doc_id", "row", chunks.alias("chunks"))
+        .select("doc_id", "row", F.inline_outer("chunks"))
+    )
 
-    return chunk_fn
+
+def reassemble(df: DataFrame) -> DataFrame:
+    """Munged chunk rows -> one row per input row: spans in chunk order,
+    the metrics and ``munge_us`` summed. Any other column
+    (``partition_id``) takes its chunk-0 value."""
+    sums = [*METRIC_FIELDS, "munge_us"]
+    carried = [c for c in df.columns if c not in ("doc_id", "row", "chunk", "spans", *sums)]
+    parts = F.array_sort(F.collect_list(F.struct("chunk", "spans")))
+    return df.groupBy("doc_id", "row").agg(
+        F.flatten(F.transform(parts, lambda p: p["spans"])).alias("spans"),
+        *[F.sum(f).alias(f) for f in sums],
+        *[F.min_by(c, "chunk").alias(c) for c in carried],
+    ).drop("row")
 
 
-def munge_chunked(
+def munge_chunks(
     df: DataFrame,
     spark: SparkSession,
-    chunk_pages: int = 64,
+    monster_threshold: int,
+    chunk_pages: int,
+    shuffle: Callable[..., DataFrame],
     rulesets_bc=None,
 ) -> DataFrame:
-    """(doc_id, spans) -> OUTPUT_SCHEMA with bounded per-task page counts."""
-    bc = rulesets_bc or broadcast_rulesets(spark)
+    """(doc_id, spans) -> OUTPUT_SCHEMA + ``partition_id``: split, then
+    ``shuffle(rows, "doc_id", "chunk")``, munge and reassemble.
+    ``partition_id`` is the shuffled partition that munged the doc's
+    chunk 0."""
+    rows = shuffle(split_chunks(df, monster_threshold, chunk_pages), "doc_id", "chunk")
+    rows = rows.withColumn("partition_id", F.spark_partition_id())
+    return reassemble(munge(rows, spark, rulesets_bc=rulesets_bc))
 
-    rows = df.select(
-        "doc_id", F.posexplode("spans").alias("pos", "s")
-    ).select(
-        "doc_id",
-        F.col("pos").cast("int").alias("pos"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
-    w = W.partitionBy("doc_id").orderBy("pos")
-    rows = rows.withColumn(
-        "page_idx",
-        F.sum((F.col("kind") == "page").cast("int")).over(w) - F.lit(1),
-    )
-    # media before the first page belongs to chunk 0
-    eff = F.greatest(F.col("page_idx"), F.lit(0))
-    rows = rows.withColumn("chunk", (eff / chunk_pages).cast("int"))
 
-    cp = chunk_pages
-    is_page = F.col("kind") == "page"
-    in_low_halo = is_page & (F.col("chunk") > 0) & (eff % cp < HALO)
-    in_high_halo = is_page & (eff % cp >= cp - HALO)
-    assignments = F.filter(
-        F.array(
-            F.struct(
-                F.col("chunk").alias("c"), F.lit(False).alias("halo"), F.lit(True).alias("ok")
-            ),
-            F.struct(
-                (F.col("chunk") - 1).alias("c"), F.lit(True).alias("halo"), in_low_halo.alias("ok")
-            ),
-            F.struct(
-                (F.col("chunk") + 1).alias("c"), F.lit(True).alias("halo"), in_high_halo.alias("ok")
-            ),
-        ),
-        lambda a: a["ok"],
-    )
-    exploded = rows.select(
-        "doc_id", "pos", "kind", "text", "media_ref", "offset", "page_idx",
-        F.explode(assignments).alias("a"),
-    ).select(
-        "doc_id", "pos", "kind", "text", "media_ref", "offset", "page_idx",
-        F.col("a.c").alias("chunk"),
-        F.col("a.halo").alias("is_halo"),
-    )
-
-    # Explicit repartition on the group keys: chunk rows are few BYTES
-    # but huge CPU, and AQE coalesces exchanges by byte size — left to
-    # itself it folds every chunk of a monster into one task, undoing
-    # the whole point. A user repartition is never coalesced, and
-    # applyInPandas reuses the co-partitioning (no second exchange).
-    par = spark.sparkContext.defaultParallelism * 2
-    chunked = (
-        exploded.repartition(par, "doc_id", "chunk")
-        .groupBy("doc_id", "chunk")
-        .applyInPandas(_make_chunk_fn(bc), schema=_CHUNK_ROWS_SCHEMA)
-    )
-
-    # reassemble: spans in pos order + metric sums (JVM-side)
-    span_struct = F.struct(
-        F.col("pos"),
-        F.struct("kind", "text", "media_ref", "offset").alias("s"),
-    )
-    agg = chunked.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(span_struct)), lambda x: x["s"]
-        ).alias("spans"),
-        *[F.sum(f).alias(f) for f in METRIC_FIELDS],
-        F.sum("munge_us").alias("munge_us"),
-    )
-    return agg.select([f.name for f in OUTPUT_SCHEMA.fields])
+def _munge_repartitioned(
+    df: DataFrame, spark: SparkSession, monster_threshold: int, chunk_pages: int, rulesets_bc
+) -> DataFrame:
+    n = spark.sparkContext.defaultParallelism * 2
+    return munge_chunks(
+        df, spark, monster_threshold, chunk_pages,
+        lambda rows, *keys: rows.repartition(n, *keys), rulesets_bc,
+    ).drop("partition_id")
 
 
 def munge_auto(
     df: DataFrame,
     spark: SparkSession,
-    monster_threshold: int = 256,
-    chunk_pages: int = 64,
+    monster_threshold: int = MONSTER_THRESHOLD,
+    chunk_pages: int = CHUNK_PAGES,
 ) -> DataFrame:
-    """Route: normal docs through the single-pass operator, monsters
-    through chunking. The size predicate is JVM-side (`size(spans)`)."""
-    bc = broadcast_rulesets(spark)
-    small = df.where(F.size("spans") <= monster_threshold)
-    big = df.where(F.size("spans") > monster_threshold)
-    return munge(small, spark, rulesets_bc=bc).unionByName(
-        munge_chunked(big, spark, chunk_pages=chunk_pages, rulesets_bc=bc)
-    )
+    """(doc_id, spans) -> OUTPUT_SCHEMA; docs above ``monster_threshold``
+    spans are munged in chunks of ``chunk_pages`` pages."""
+    return _munge_repartitioned(df, spark, monster_threshold, chunk_pages, None)
+
+
+def munge_chunked(
+    df: DataFrame,
+    spark: SparkSession,
+    chunk_pages: int = CHUNK_PAGES,
+    rulesets_bc=None,
+) -> DataFrame:
+    """(doc_id, spans) -> OUTPUT_SCHEMA with every doc munged in chunks of
+    ``chunk_pages`` pages."""
+    return _munge_repartitioned(df, spark, 0, chunk_pages, rulesets_bc)

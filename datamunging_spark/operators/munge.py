@@ -1,21 +1,22 @@
 """Spark-side munge operator: the whole correction cascade as ONE
-Arrow-batched ``mapInPandas`` pass.
+Arrow-batched ``mapInArrow`` pass.
 
 Independent implementation of SPEC.md (the oracle in ``oracle/munge.py``
 is the executable spec; pytest asserts span-sequence equality between the
 two). Regex-based where the oracle is loop-based, so agreement between
 them is evidence of correctness rather than shared code.
 
-Why ``mapInPandas`` and not a scalar pandas UDF: one document row must
-yield BOTH rewritten spans and a metrics struct; mapInPandas emits all
-output columns in one JVM<->Python crossing per Arrow batch, and lets us
-emit per-partition lineage without a second pass. The batch size is
-capped by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (session.py)
-so skewed monster documents cannot blow executor memory.
+Why ``mapInArrow`` and not a scalar pandas UDF: one document row must
+yield BOTH rewritten spans and a metrics struct; mapInArrow emits all
+output columns in one JVM<->Python crossing per Arrow batch, and passes
+any other column (the chunk number and partition id of
+``operators/chunked.py``) through untouched. The batch size is capped by
+``spark.sql.execution.arrow.maxRecordsPerBatch`` (session.py) so skewed
+monster documents cannot blow executor memory.
 
 At cluster scale: this node is the only Python stage in the plan; the
-scan, resume anti-join, repartition, and writes around it stay JVM-side
-(see pipeline.py and its .explain notes).
+scan, resume anti-join, chunk split, repartition, reassembly and writes
+around it stay JVM-side (see pipeline.py and operators/chunked.py).
 """
 
 from __future__ import annotations
@@ -23,8 +24,6 @@ from __future__ import annotations
 import re
 import time
 from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import types as T
 
@@ -332,22 +331,31 @@ class _Munger:
             out_metrics.append(pm)
         return out_texts, out_metrics
 
-    # ---- whole document -------------------------------------------------
-    def munge_doc(self, spans: list[dict]) -> tuple[list[dict], dict]:
+    # ---- whole document or chunk ----------------------------------------
+    def munge_doc(
+        self, spans: list[dict], lo: int = 0, hi: int = 0
+    ) -> tuple[list[dict], dict]:
+        """Munge one row's spans. The first ``lo`` and last ``hi`` spans
+        are halo pages of a chunked monster (operators/chunked.py): they
+        give R3 its context and are dropped from the returned spans."""
         m = {f: 0 for f in METRIC_FIELDS}
+        end = len(spans) - hi
         page_idx = [k for k, s in enumerate(spans) if s["kind"] == "page"]
-        texts, per_page = self.munge_pages([spans[k]["text"] for k in page_idx])
+        texts, per_page = self.munge_pages(
+            [spans[k]["text"] for k in page_idx],
+            owned=[lo <= k < end for k in page_idx],
+        )
         for pm in per_page:
             for f in METRIC_FIELDS:
                 m[f] += pm[f]
-        out = [dict(s) for s in spans]
-        for pi, k in enumerate(page_idx):
-            out[k]["text"] = texts[pi]
+        out = [dict(s) for s in spans[lo:end]]
+        for k, text in zip((k for k in page_idx if lo <= k < end), texts):
+            out[k - lo]["text"] = text
         return out, m
 
 
 def make_munge_arrow(rulesets_bc):
-    """Returns the mapInArrow function (doc_id, spans) -> OUTPUT_SCHEMA.
+    """Returns the mapInArrow function of ``munge``.
 
     mapInArrow instead of mapInPandas: pandas conversion of a
     ``list<struct>`` column materializes one Python dict PER SPAN on both
@@ -361,12 +369,17 @@ def make_munge_arrow(rulesets_bc):
     def munge_arrow(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         munger = _Munger(rulesets_bc.value)
         for batch in batches:
-            if batch.num_rows == 0:
+            n_rows = batch.num_rows
+            if n_rows == 0:
                 continue
-            doc_ids = batch.column(0)
-            spans_col = batch.column(1)
+            names = batch.schema.names
+            spans_col = batch.column(names.index("spans"))
             if isinstance(spans_col, pa.ChunkedArray):  # pragma: no cover
                 spans_col = spans_col.combine_chunks()
+            halo_lo, halo_hi = (
+                batch.column(names.index(c)).to_pylist() if c in names else [0] * n_rows
+                for c in ("lo", "hi")
+            )
             offsets = spans_col.offsets.to_pylist()
             flat = spans_col.values
             kinds = flat.field("kind").to_pylist()
@@ -376,12 +389,14 @@ def make_munge_arrow(rulesets_bc):
 
             # offsets are ABSOLUTE positions into the full child array
             # (a sliced ListArray keeps them absolute), so index flat
-            # lists directly and rebuild the list with the same offsets.
+            # lists directly; the output keeps each row's owned spans.
             new_texts: list[str] = list(texts)
+            keep: list[int] = []
+            new_offsets = [0]
             metric_cols: dict[str, list[int]] = {f: [] for f in METRIC_FIELDS}
             timings: list[int] = []
-            for r in range(batch.num_rows):
-                lo, hi = offsets[r], offsets[r + 1]
+            for r in range(n_rows):
+                a, b = offsets[r], offsets[r + 1]
                 spans = [
                     {
                         "kind": kinds[i],
@@ -389,13 +404,16 @@ def make_munge_arrow(rulesets_bc):
                         "media_ref": refs[i],
                         "offset": offs[i],
                     }
-                    for i in range(lo, hi)
+                    for i in range(a, b)
                 ]
                 t0 = time.monotonic()
-                out, m = munger.munge_doc(spans)
+                out, m = munger.munge_doc(spans, halo_lo[r], halo_hi[r])
                 timings.append(int((time.monotonic() - t0) * 1e6))
-                for i, s in zip(range(lo, hi), out):
+                owned = range(a + halo_lo[r], b - halo_hi[r])
+                for i, s in zip(owned, out):
                     new_texts[i] = s["text"]
+                keep.extend(owned)
+                new_offsets.append(len(keep))
                 for f in METRIC_FIELDS:
                     metric_cols[f].append(m[f])
 
@@ -407,25 +425,41 @@ def make_munge_arrow(rulesets_bc):
                     flat.field("offset"),
                 ],
                 names=["kind", "text", "media_ref", "offset"],
-            )
+            ).take(pa.array(keep, type=pa.int64()))
             spans_out = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int32()), struct_arr
+                pa.array(new_offsets, type=pa.int32()), struct_arr
             )
-            arrays = [doc_ids, spans_out]
-            names = ["doc_id", "spans"]
+            arrays, out_names = [], []
+            for name, col in zip(names, batch.columns):
+                if name in ("lo", "hi"):
+                    continue
+                arrays.append(spans_out if name == "spans" else col)
+                out_names.append(name)
             for f in METRIC_FIELDS:
                 arrays.append(pa.array(metric_cols[f], type=pa.int64()))
-                names.append(f)
+                out_names.append(f)
             arrays.append(pa.array(timings, type=pa.int64()))
-            names.append("munge_us")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            out_names.append("munge_us")
+            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
     return munge_arrow
 
 
 def munge(df, spark, rulesets_bc=None):
-    """DataFrame (doc_id, spans) -> (doc_id, spans', metrics...)."""
+    """DataFrame (doc_id, spans) -> (doc_id, spans', metrics..., munge_us).
+
+    Chunk rows of ``operators/chunked.py`` also carry ``lo``/``hi`` halo
+    page counts, which are consumed; every other column passes through.
+    """
     from ..rulesets.loader import broadcast_rulesets
 
     bc = rulesets_bc or broadcast_rulesets(spark)
-    return df.mapInArrow(make_munge_arrow(bc), schema=OUTPUT_SCHEMA)
+    schema = T.StructType(
+        [
+            T.StructField("spans", SPANS_TYPE, True) if f.name == "spans" else f
+            for f in df.schema.fields
+            if f.name not in ("lo", "hi")
+        ]
+        + OUTPUT_SCHEMA.fields[len(INPUT_SCHEMA.fields):]
+    )
+    return df.mapInArrow(make_munge_arrow(bc), schema=schema)

@@ -1,8 +1,9 @@
 """The end-to-end extraction pipeline (SURVEY.md §3.2):
 
-    spans table ──read──► anti-join(state) ──salted repartition──►
-        munge (ONE Arrow mapInPandas) ──► output table (= checkpoint)
-                                     └──► per-partition lineage table
+    spans table ──read──► anti-join(state) ──split into chunk rows──►
+        salted repartition ──► munge (ONE Arrow mapInArrow) ──►
+        reassemble per input row ──► output table (= checkpoint)
+                             └──► per-partition lineage table
 
 Resumability protocol (BASELINE.json:14 "resumable from checkpoint with
 per-partition lineage + metrics"):
@@ -27,13 +28,15 @@ per-partition lineage + metrics"):
   commit and the v2-committer caveat disappears.
 
 Skew (BASELINE.json:6 "explicit salting for skewed multi-page volumes"):
-a monster volume is one ROW, so join-skew tools don't apply; the unit of
-balance is the partition's bag of docs. We repartition on
-``xxhash64(doc_id, salt)`` into ``partitions`` (default 4× parallelism)
-so a handful of monster docs spread across many small partitions, and cap
-Arrow batch size (session.py) so one batch never holds many monsters.
-AQE cannot help inside mapInPandas — this is the hand-built part
-(SURVEY.md §4).
+a monster volume is one ROW, so join-skew tools don't apply. Monsters are
+split into page-range chunk rows first (operators/chunked.py), and the
+unit of balance is the partition's bag of chunk rows. We repartition on
+``xxhash64(doc_id, chunk, salt)`` into ``partitions`` (default 4×
+parallelism) so the chunks of a monster spread across many small
+partitions, and cap Arrow batch size (session.py) so one batch never holds
+many monsters. AQE splits neither a row nor a Python task — this is the
+hand-built part (SURVEY.md §4). ``partition_id`` records the partition
+that munged a doc (its chunk 0), not the reassembly's.
 """
 
 from __future__ import annotations
@@ -43,7 +46,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .catalog import ParquetTableIO, default_io
-from .operators.chunked import munge_auto
+from .operators.chunked import CHUNK_PAGES, MONSTER_THRESHOLD, munge_chunks
 
 STATE_SUFFIX = "_state"
 
@@ -75,8 +78,10 @@ def _run_stage(
     io: ParquetTableIO | None,
 ):
     """Shared resume/salt/lineage machinery for any (doc_id, spans) →
-    (doc_id, spans', metrics…) Arrow operator. Returns the run's output
-    DataFrame (rows of this run only)."""
+    (doc_id, spans', metrics…) Arrow operator. ``apply_op(todo, shuffle)``
+    returns the processed rows with their ``partition_id``;
+    ``shuffle(df, *keys)`` is the salted repartition on those key columns.
+    Returns the run's output DataFrame (rows of this run only)."""
     io = io or default_io()
     spark.conf.set("mapreduce.fileoutputcommitter.algorithm.version", "2")
 
@@ -90,12 +95,14 @@ def _run_stage(
 
     # Salted hash repartition: spreads skewed monster docs; `salt` varies
     # per deployment to dodge pathological co-location of hot doc_ids.
-    todo = todo.repartition(partitions, F.xxhash64(F.col("doc_id"), F.lit(salt)))
+    def shuffle(df: DataFrame, *keys: str) -> DataFrame:
+        return df.repartition(partitions, F.xxhash64(*keys, F.lit(salt)))
 
-    processed = (
-        apply_op(todo)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("partition_id", F.spark_partition_id())
+    processed = apply_op(todo, shuffle)
+    processed = processed.select(
+        *[c for c in processed.columns if c != "partition_id"],
+        F.lit(run_id).alias("run_id"),
+        "partition_id",
     )
     # Run totals ride the WRITE job via the Observation API (CollectMetrics
     # accumulators, retry-safe per committed task) — at 100 TB this saves
@@ -131,22 +138,25 @@ def run_pipeline(
     partitions: int | None = None,
     salt: int = 0,
     io: ParquetTableIO | None = None,
-    monster_threshold: int = 512,
+    monster_threshold: int = MONSTER_THRESHOLD,
 ) -> RunResult:
     """Process all not-yet-done docs from ``input_df`` into ``output_path``.
 
     Idempotent: rerunning after success is a no-op; rerunning after a
     mid-job kill processes only the missing docs.
     """
-    # normal docs: single mapInArrow pass; monsters (> monster_threshold
-    # spans): bounded chunks with halo pages (operators/chunked.py) so no
-    # single task carries a 10^4-span row
+    # monsters (> monster_threshold spans) are split into bounded chunks
+    # with halo pages (operators/chunked.py) so no single task carries a
+    # 10^4-span row; every chunk and normal doc goes through one munge pass
+    def apply_op(todo: DataFrame, shuffle) -> DataFrame:
+        return munge_chunks(todo, spark, monster_threshold, CHUNK_PAGES, shuffle)
+
     _out, totals = _run_stage(
         spark,
         input_df,
         output_path,
         run_id,
-        lambda df: munge_auto(df, spark, monster_threshold=monster_threshold),
+        apply_op,
         ("pages", "tokens_total", "tokens_corrected"),
         "munge_us",
         partitions,
@@ -188,7 +198,9 @@ def run_extract_pipeline(
         input_df,
         output_path,
         run_id,
-        lambda df: extract_auto(df, spark),
+        lambda todo, shuffle: extract_auto(shuffle(todo, "doc_id"), spark).withColumn(
+            "partition_id", F.spark_partition_id()
+        ),
         ("html_blocks_kept", "pdf_lines_kept", "pdf_lines_dropped", "chars_out"),
         "extract_us",
         partitions,

@@ -62,20 +62,18 @@ class Rulesets:
     personal_names: frozenset[str]
     place_names: frozenset[str]
     char_map: tuple[tuple[str, str], ...]
-    # derived, precomputed once
+    # derived from char_map, precomputed once by load_rulesets: the
+    # 1:1 entries as a str.translate table, the rest as replace pairs
     char_trans: dict[int, str] = field(default_factory=dict, compare=False)
+    char_multi: tuple[tuple[str, str], ...] = field(default=(), compare=False)
 
     def translate(self, text: str) -> str:
         """Apply the char-normalization map (SPEC.md §2)."""
         t = text.translate(self.char_trans)
-        for src, dst in self._multi:
+        for src, dst in self.char_multi:
             if src in t:
                 t = t.replace(src, dst)
         return t
-
-    @property
-    def _multi(self) -> list[tuple[str, str]]:
-        return [(s, d) for s, d in self.char_map if len(s) > 1 or len(d) > 1]
 
 
 def load_rulesets(data_dir: Path | None = None) -> Rulesets:
@@ -84,7 +82,7 @@ def load_rulesets(data_dir: Path | None = None) -> Rulesets:
     for amb, neigh, res in _read_tsv("context_rules.tsv", d):
         ctx.setdefault(amb.lower(), []).append((neigh.lower(), res))
     char_map = tuple((s, dst) for s, dst in _read_tsv("char_map.tsv", d))
-    rs = Rulesets(
+    return Rulesets(
         main_dictionary=frozenset(
             w.lower() for w in _read_lines("main_dictionary.txt", d)
         ),
@@ -102,10 +100,9 @@ def load_rulesets(data_dir: Path | None = None) -> Rulesets:
         personal_names=frozenset(_read_lines("personal_names.txt", d)),
         place_names=frozenset(_read_lines("place_names.txt", d)),
         char_map=char_map,
+        char_trans={ord(s): dst for s, dst in char_map if len(s) == 1 and len(dst) == 1},
+        char_multi=tuple((s, dst) for s, dst in char_map if len(s) > 1 or len(dst) > 1),
     )
-    trans = {ord(s): d for s, d in char_map if len(s) == 1 and len(d) == 1}
-    rs.char_trans.update(trans)
-    return rs
 
 
 def broadcast_rulesets(spark, rulesets: Rulesets | None = None):

@@ -8,13 +8,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from datamunging_spark.generator import corpus_to_rows, generate_corpus
+from datamunging_spark.operators.chunked import CHUNK_PAGES
 from datamunging_spark.operators.munge import INPUT_SCHEMA
+from datamunging_spark.oracle.munge import Span, munge_document
 from datamunging_spark.pipeline import (
     read_output,
     read_state,
     rebuild_state,
     run_pipeline,
 )
+from datamunging_spark.rulesets.loader import load_rulesets
+
+RS = load_rulesets()
 
 
 @pytest.fixture(scope="module")
@@ -86,6 +91,59 @@ def test_salted_partitioning_spreads_docs(spark, corpus_df, tmp_path_factory):
     )
     # 20 docs into 16 partitions: no partition may hoard them
     assert max(r["count"] for r in per_part) <= 5
+
+
+def _monster_df(spark, n_pages):
+    return spark.createDataFrame(
+        [{
+            "doc_id": "monster",
+            "spans": [
+                {"kind": kind, "text": f"page {p} text" if kind == "page" else "",
+                 "media_ref": "" if kind == "page" else f"m/{p}", "offset": 2 * p + j}
+                for p in range(n_pages)
+                for j, kind in enumerate(("page", "image"))
+            ],
+        }],
+        schema=INPUT_SCHEMA,
+    )
+
+
+def test_lineage_counts_a_chunked_monster_once(spark, corpus_df, tmp_path_factory):
+    """A monster munged as several chunk rows is one output row, and its
+    docs and pages are counted once in the lineage table."""
+    n_pages = 2 * CHUNK_PAGES + 5  # three chunks
+    monster = _monster_df(spark, n_pages)
+    out = str(tmp_path_factory.mktemp("pipe") / "out")
+    res = run_pipeline(spark, corpus_df.unionByName(monster), out, run_id="r1",
+                       partitions=8, monster_threshold=8)
+    input_pages = corpus_df.select(
+        F.sum(F.size(F.filter("spans", lambda s: s["kind"] == "page")))
+    ).first()[0] + n_pages
+    assert (res.docs_processed, res.pages) == (21, input_pages)
+    assert spark.read.parquet(out).where(F.col("doc_id") == "monster").count() == 1
+    totals = read_state(spark, out).agg(F.sum("docs"), F.sum("pages")).first()
+    assert tuple(totals) == (21, input_pages)
+
+
+def test_repeated_input_rows_are_not_merged(spark, corpus_df, tmp_path_factory):
+    """An input delivered twice (a file ingested twice) gives two identical
+    output rows per doc, chunked monster or not, like a retried task; the
+    reassembly does not merge them, and read_output keeps one copy that
+    equals the oracle."""
+    once = corpus_df.unionByName(_monster_df(spark, 2 * CHUNK_PAGES + 5))
+    out = str(tmp_path_factory.mktemp("pipe") / "out")
+    res = run_pipeline(spark, once.unionByName(once), out, run_id="r1",
+                       partitions=8, monster_threshold=8)
+    assert res.docs_processed == 42
+    raw = spark.read.parquet(out).groupBy("doc_id").agg(
+        F.count("*").alias("n"), F.countDistinct("spans").alias("distinct")
+    )
+    assert raw.where((F.col("n") != 2) | (F.col("distinct") != 1)).count() == 0
+    assert raw.count() == 21
+    got = {r.doc_id: [tuple(s) for s in r.spans] for r in read_output(spark, out).collect()}
+    for r in once.collect():
+        golden, _ = munge_document(r.doc_id, [Span(*s) for s in r.spans], RS)
+        assert got[r.doc_id] == [tuple(s) for s in golden], r.doc_id
 
 
 # ---- extraction pipeline shares the resume protocol ----------------------

@@ -189,6 +189,70 @@ def test_munge_pipeline_single_python_stage(spark):
     assert "EvalPython" not in plan  # no row-at-a-time Python
 
 
+def test_run_pipeline_munges_every_doc_in_one_python_stage(spark, tmp_path):
+    """Monsters are split into chunk rows before the salted repartition, so
+    the munge plan has one Python node and two Exchanges: the salted
+    repartition and the reassembly by doc_id."""
+    from datamunging_spark.catalog import ParquetTableIO
+    from datamunging_spark.pipeline import run_pipeline
+
+    class RecordingIO(ParquetTableIO):
+        def __init__(self):
+            self.appended = []
+
+        def append(self, df, path):
+            self.appended.append(df)
+            super().append(df, path)
+
+    rows = corpus_to_rows(generate_corpus(seed=5, n_docs=5, body_lines=(4, 6)))
+    df = spark.createDataFrame(rows, schema=INPUT_SCHEMA)
+    io = RecordingIO()
+    run_pipeline(spark, df, str(tmp_path / "out"), "r1", io=io, monster_threshold=8)
+    plan = plan_of(io.appended[0])  # the output write; the second is lineage
+    assert plan.count("MapInArrow") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan and "EvalPython" not in plan, plan
+    assert "Window" not in plan, plan
+    assert plan.count("Exchange") == 2, plan
+    assert "REPARTITION_BY_NUM" in plan, plan
+
+
+def test_split_scales_to_a_16k_span_doc(spark):
+    """One ~16k-span volume becomes ceil(pages / chunk_pages) chunk rows
+    whose owned spans add up to the input; no inferred filter re-derives
+    the chunk array below the generator."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from datamunging_spark.operators.chunked import HALO, split_chunks
+
+    n, chunk_pages = 16_000, 64
+    doc = spark.range(1).select(
+        F.lit("big").alias("doc_id"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n - 1)),
+            lambda i: F.struct(
+                F.when(i % 4 == 3, "image").otherwise("page").alias("kind"),
+                F.lit("text").alias("text"),
+                F.lit("").alias("media_ref"),
+                i.alias("offset"),
+            ),
+        ).alias("spans"),
+    )
+    chunks = split_chunks(doc, 256, chunk_pages)
+    optimized = chunks._jdf.queryExecution().optimizedPlan().toString()
+    assert "Filter" not in optimized, optimized
+    rows = chunks.select("chunk", "lo", "hi", F.size("spans").alias("n")).collect()
+    pages = n - n // 4
+    assert len(rows) == math.ceil(pages / chunk_pages)
+    assert sum(r.n - r.lo - r.hi for r in rows) == n
+    last = len(rows) - 1
+    assert all(
+        (r.lo, r.hi) == (0 if r.chunk == 0 else HALO, 0 if r.chunk == last else HALO)
+        for r in rows
+    )
+
+
 def test_json_and_window_plans(spark, sf_dir):
     js = plan_of(RELATIONAL_QUERIES["json_extract"][0](spark, sf_dir))
     assert "partial_" in js  # partial agg before shuffle
