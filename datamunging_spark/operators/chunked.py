@@ -16,8 +16,9 @@ the one Python pass (``operators.munge.munge``):
   halo gives every owned page its full comparison context; halo pages
   emit no output;
 - **shuffle**: the caller's repartition hashes the chunk rows on
-  ``(doc_id, chunk)`` (``run_pipeline`` adds its salt), so a 10^5-span
-  monster becomes many independent tasks. The repartition is
+  ``(doc_id, chunk)`` (``run_pipeline`` adds its salt) into one
+  partition per core, so the chunks of a 10^5-span monster spread over
+  every core. The repartition is
   explicit because chunk rows are few BYTES but much CPU: AQE coalesces
   exchanges by byte size, and left to itself it folds every chunk of a
   monster into one task. A user repartition is never coalesced.
@@ -143,7 +144,7 @@ def munge_chunks(
 def _munge_repartitioned(
     df: DataFrame, spark: SparkSession, monster_threshold: int, chunk_pages: int, rulesets_bc
 ) -> DataFrame:
-    n = spark.sparkContext.defaultParallelism * 2
+    n = spark.sparkContext.defaultParallelism
     return munge_chunks(
         df, spark, monster_threshold, chunk_pages,
         lambda rows, *keys: rows.repartition(n, *keys), rulesets_bc,

@@ -38,6 +38,21 @@ class DocMetrics:
     pagenum_lines_removed: int = 0
 
 
+# ---------------------------------------------------------------- R5 translate
+
+
+def translate(text: str, rs: Rulesets) -> str:
+    """SPEC.md §2 as written: the 1:1 entries of ``char_map`` as one
+    ``str.translate``, then every other entry with ``str.replace`` in
+    file order. Independent of ``Rulesets.translate``, the engine's
+    one-chain version, so the oracle tests check that one too."""
+    t = text.translate({ord(s): d for s, d in rs.char_map if len(s) == 1 and len(d) == 1})
+    for src, dst in rs.char_map:
+        if len(src) != 1 or len(dst) != 1:
+            t = t.replace(src, dst)
+    return t
+
+
 # ---------------------------------------------------------------- R3 helpers
 
 
@@ -258,7 +273,7 @@ def munge_document(
     metrics.pages = len(page_positions)
 
     # 1-2. char normalization + line split (pages only)
-    pages = [rs.translate(spans[k].text).split("\n") for k in page_positions]
+    pages = [translate(spans[k].text, rs).split("\n") for k in page_positions]
 
     # 3. header/footer strip
     pages, metrics.header_lines_removed = strip_headers(pages, rs)

@@ -29,14 +29,17 @@ per-partition lineage + metrics"):
 
 Skew (BASELINE.json:6 "explicit salting for skewed multi-page volumes"):
 a monster volume is one ROW, so join-skew tools don't apply. Monsters are
-split into page-range chunk rows first (operators/chunked.py), and the
-unit of balance is the partition's bag of chunk rows. We repartition on
-``xxhash64(doc_id, chunk, salt)`` into ``partitions`` (default 4×
-parallelism) so the chunks of a monster spread across many small
-partitions, and cap Arrow batch size (session.py) so one batch never holds
-many monsters. AQE splits neither a row nor a Python task — this is the
-hand-built part (SURVEY.md §4). ``partition_id`` records the partition
-that munged a doc (its chunk 0), not the reassembly's.
+split into page-range chunk rows of at most 64 pages first
+(operators/chunked.py), and the unit of balance is the partition's bag of
+chunk rows. We repartition on ``xxhash64(doc_id, chunk, salt)`` into
+``partitions`` (default: ``defaultParallelism``, one Python task per core)
+so the chunks of a monster spread across the cores; more partitions buy
+no balance, because each Python task costs ≈0.2 s of worker CPU to start
+whatever its data (PySpark 4.1, measured on a 4-core host). The Arrow
+batch size is capped (session.py) so one batch never holds many monsters.
+AQE splits neither a row nor a Python task — this is the hand-built part
+(SURVEY.md §4). ``partition_id`` records the partition that munged a doc
+(its chunk 0), not the reassembly's.
 """
 
 from __future__ import annotations
@@ -86,7 +89,7 @@ def _run_stage(
     spark.conf.set("mapreduce.fileoutputcommitter.algorithm.version", "2")
 
     if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism * 4
+        partitions = spark.sparkContext.defaultParallelism
 
     todo = input_df
     done = _done_docs(spark, io, output_path)

@@ -15,7 +15,7 @@ become a broadcast *join* instead (SURVEY.md §2.1 R8).
 from __future__ import annotations
 
 import string
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
 
 PUNCT = string.punctuation + "“”‘’"  # incl. curly quotes
@@ -61,19 +61,39 @@ class Rulesets:
     roman_numerals: frozenset[str]
     personal_names: frozenset[str]
     place_names: frozenset[str]
+    # (src, dst) in file order: every src is one character and no dst
+    # contains a src (checked by load_rulesets)
     char_map: tuple[tuple[str, str], ...]
-    # derived from char_map, precomputed once by load_rulesets: the
-    # 1:1 entries as a str.translate table, the rest as replace pairs
-    char_trans: dict[int, str] = field(default_factory=dict, compare=False)
-    char_multi: tuple[tuple[str, str], ...] = field(default=(), compare=False)
 
     def translate(self, text: str) -> str:
-        """Apply the char-normalization map (SPEC.md §2)."""
-        t = text.translate(self.char_trans)
-        for src, dst in self.char_multi:
-            if src in t:
-                t = t.replace(src, dst)
-        return t
+        """Apply the char-normalization map (SPEC.md §2).
+
+        SPEC §2 applies the 1:1 entries as one ``str.translate`` and then
+        the rest with ``str.replace`` in file order. Because each source
+        is one character that no destination contains, every replacement
+        touches only its own characters and creates no other source, so
+        one ``str.replace`` chain in file order gives the same result."""
+        for src, dst in self.char_map:
+            if src in text:
+                text = text.replace(src, dst)
+        return text
+
+
+def _check_char_map(char_map: tuple[tuple[str, str], ...]) -> None:
+    """Reject a table on which ``Rulesets.translate`` would not equal
+    SPEC §2's two-phase result."""
+    sources = [src for src, _ in char_map]
+    for src in sources:
+        if len(src) != 1:
+            raise ValueError(f"char_map.tsv: source {src!r} is not one character")
+    if len(set(sources)) != len(sources):
+        raise ValueError("char_map.tsv: a source is listed twice")
+    for src, dst in char_map:
+        hit = next((s for s in sources if s in dst), None)
+        if hit is not None:
+            raise ValueError(
+                f"char_map.tsv: destination {dst!r} of {src!r} contains source {hit!r}"
+            )
 
 
 def load_rulesets(data_dir: Path | None = None) -> Rulesets:
@@ -82,6 +102,7 @@ def load_rulesets(data_dir: Path | None = None) -> Rulesets:
     for amb, neigh, res in _read_tsv("context_rules.tsv", d):
         ctx.setdefault(amb.lower(), []).append((neigh.lower(), res))
     char_map = tuple((s, dst) for s, dst in _read_tsv("char_map.tsv", d))
+    _check_char_map(char_map)
     return Rulesets(
         main_dictionary=frozenset(
             w.lower() for w in _read_lines("main_dictionary.txt", d)
@@ -100,8 +121,6 @@ def load_rulesets(data_dir: Path | None = None) -> Rulesets:
         personal_names=frozenset(_read_lines("personal_names.txt", d)),
         place_names=frozenset(_read_lines("place_names.txt", d)),
         char_map=char_map,
-        char_trans={ord(s): dst for s, dst in char_map if len(s) == 1 and len(dst) == 1},
-        char_multi=tuple((s, dst) for s, dst in char_map if len(s) > 1 or len(dst) > 1),
     )
 
 

@@ -6,8 +6,8 @@ same configs apply per executor. Knobs that matter at 100 TB scale:
 - AQE on (coalesce post-shuffle partitions, split skewed joins at runtime).
 - ``spark.sql.shuffle.partitions`` sized to cores locally; on a cluster the
   caller overrides to ~2-3x total cores (AQE coalesces the excess).
-- Arrow batch size capped: a single document row carries its whole span
-  array, so a handful of monster volumes must not blow one Arrow batch
+- Arrow batch size capped: a row carries a whole document's span array
+  (or a monster chunk's), so a handful of big rows must not blow one Arrow batch
   (SURVEY.md §4 item 1 — data skew *inside* a batch, which AQE cannot fix).
 - UTC session timezone so timestamps hash identically to the DuckDB oracle.
 """
@@ -22,8 +22,9 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 # Cap on rows per Arrow record batch crossing the JVM<->Python boundary.
-# One row = one whole document (all spans); 64 docs/batch keeps a batch of
-# even 200-span skewed docs in tens of MB.
+# In the munge pass one row is a normal document or a chunk of a monster
+# (at most 64 pages plus a 2-page halo each side, operators/chunked.py);
+# 64 rows/batch keeps a batch in tens of MB.
 ARROW_MAX_RECORDS_PER_BATCH = 64
 
 

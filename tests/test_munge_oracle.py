@@ -2,6 +2,13 @@
 
 from __future__ import annotations
 
+import shutil
+from pathlib import Path
+
+import pytest
+from hypothesis import given, settings, strategies as st
+from test_property_munge import ALPHABET
+
 from datamunging_spark.oracle.munge import (
     DocMetrics,
     Span,
@@ -9,10 +16,12 @@ from datamunging_spark.oracle.munge import (
     munge_document,
     rejoin_hyphens,
     strip_headers,
+    translate,
 )
 from datamunging_spark.rulesets.loader import load_rulesets
 
 RS = load_rulesets()
+DATA_DIR = Path(__file__).resolve().parent.parent / "datamunging_spark" / "rulesets" / "data"
 
 
 def _page(text: str, off: int) -> Span:
@@ -191,3 +200,33 @@ def test_ligature_expansion_can_trigger_fs_correction():
     )
     assert eng_out[0]["text"] == "stop"
     assert eng_metrics["tokens_corrected"] == 1
+
+
+@settings(max_examples=500, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.text(alphabet=ALPHABET, max_size=40),
+            st.sampled_from([src for src, _ in RS.char_map]),
+            st.text(max_size=20),
+        ),
+        max_size=12,
+    ).map("".join)
+)
+def test_engine_translate_equals_spec_translate(text):
+    """Rulesets.translate (one replace chain) == SPEC §2's two phases."""
+    assert RS.translate(text) == translate(text, RS)
+
+
+@pytest.mark.parametrize(
+    "table",
+    ["ﬁ\tfi\nfi\tf", "ſ\ts\næ\tſe", "ſ\ts\nſ\tf"],
+    ids=["two-char-source", "destination-contains-source", "repeated-source"],
+)
+def test_load_rulesets_rejects_an_unsafe_char_map(tmp_path, table):
+    """A char_map the one-chain translate cannot apply exactly is refused."""
+    data = tmp_path / "data"
+    shutil.copytree(DATA_DIR, data)
+    (data / "char_map.tsv").write_text(table + "\n", encoding="utf-8")
+    with pytest.raises(ValueError, match="char_map"):
+        load_rulesets(data)

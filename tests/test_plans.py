@@ -189,10 +189,9 @@ def test_munge_pipeline_single_python_stage(spark):
     assert "EvalPython" not in plan  # no row-at-a-time Python
 
 
-def test_run_pipeline_munges_every_doc_in_one_python_stage(spark, tmp_path):
-    """Monsters are split into chunk rows before the salted repartition, so
-    the munge plan has one Python node and two Exchanges: the salted
-    repartition and the reassembly by doc_id."""
+def _run_pipeline_write_plan(spark, tmp_path) -> str:
+    """Physical plan of a fresh ``run_pipeline``'s output write, over five
+    docs of which the ones above 8 spans are chunked."""
     from datamunging_spark.catalog import ParquetTableIO
     from datamunging_spark.pipeline import run_pipeline
 
@@ -208,12 +207,38 @@ def test_run_pipeline_munges_every_doc_in_one_python_stage(spark, tmp_path):
     df = spark.createDataFrame(rows, schema=INPUT_SCHEMA)
     io = RecordingIO()
     run_pipeline(spark, df, str(tmp_path / "out"), "r1", io=io, monster_threshold=8)
-    plan = plan_of(io.appended[0])  # the output write; the second is lineage
+    return plan_of(io.appended[0])  # the output write; the second is lineage
+
+
+def test_run_pipeline_munges_every_doc_in_one_python_stage(spark, tmp_path):
+    """Monsters are split into chunk rows before the salted repartition, so
+    the munge plan has one Python node and two Exchanges: the salted
+    repartition and the reassembly by doc_id."""
+    plan = _run_pipeline_write_plan(spark, tmp_path)
     assert plan.count("MapInArrow") == 1, plan
     assert "FlatMapGroupsInPandas" not in plan and "EvalPython" not in plan, plan
     assert "Window" not in plan, plan
     assert plan.count("Exchange") == 2, plan
     assert "REPARTITION_BY_NUM" in plan, plan
+
+
+def test_munge_runs_one_python_task_per_core(spark, tmp_path):
+    """Each Python task pays a fixed worker start-up whatever its data, and
+    chunk rows already balance monsters, so the repartition that feeds the
+    munge pass has defaultParallelism partitions, in run_pipeline (salted)
+    and in munge_auto."""
+    import re
+
+    from datamunging_spark.operators.chunked import munge_auto
+
+    def repartition_counts(plan: str) -> list[int]:
+        return [int(n) for n in re.findall(r", (\d+)\), REPARTITION_BY_NUM", plan)]
+
+    cores = spark.sparkContext.defaultParallelism
+    assert repartition_counts(_run_pipeline_write_plan(spark, tmp_path)) == [cores]
+    rows = corpus_to_rows(generate_corpus(seed=5, n_docs=5, body_lines=(4, 6)))
+    df = spark.createDataFrame(rows, schema=INPUT_SCHEMA)
+    assert repartition_counts(plan_of(munge_auto(df, spark, monster_threshold=8))) == [cores]
 
 
 def test_split_scales_to_a_16k_span_doc(spark):
