@@ -912,8 +912,10 @@ def extract_munge(spark, sf_dir):
     # repartitioning after construction would ship the fat span arrays
     # through the shuffle and leave construction single-core (a small
     # parquet file scans as one partition).
+    # One partition per core: each Python task pays a fixed worker
+    # start-up whatever its data (as in pipeline._run_stage).
     docs = t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism * 2
+        spark.sparkContext.defaultParallelism
     )
     words = F.split(F.col("text"), " ")
     n = F.size(words)
@@ -996,7 +998,7 @@ def extract_main_content(spark, sf_dir):
     from .operators.extract import extract
 
     docs = t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism * 2
+        spark.sparkContext.defaultParallelism
     )
     did = F.col("doc_id").cast("string")
     html = F.format_string(_WEB_HTML_TPL, did, did, F.col("text"))
@@ -1055,7 +1057,7 @@ def extract_munge_metrics(spark, sf_dir):
     from .operators.munge import munge
 
     docs = t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism * 2
+        spark.sparkContext.defaultParallelism
     )
     words = F.split(F.col("text"), " ")
     lines = F.transform(
@@ -10468,16 +10470,48 @@ ML_QUERIES["kmv_set_similarity"] = (kmv_set_similarity, _kmv_sql())
 # is a minimum, hence strictly below the re-attached node), preserve
 # connectivity, and strictly shrink a potential function; the fixpoint is
 # a forest of stars whose centers are component minima, so the label read
-# -off is one projection. The engine iterates to the TRUE fixpoint
-# (symmetric-difference count == 0, the paper's termination test) and
+# -off is one projection. The engine iterates to the TRUE fixpoint (the
+# round's output equals its input, the paper's termination test) and
 # raises past _LSS_MAX_ROUNDS — never silently under-converged.
 #
-# Scale shape per double-round: one node-keyed groupBy (min over the
-# symmetrized edge list, map-side combinable) + one equi-join on the node
-# key + distinct — every one hash-shuffled on node ids, nothing keyed on
-# a corpus-sized composite, no all-pairs anywhere. localCheckpoint
-# truncates the per-round lineage exactly like k_core's peel loop (at
-# cluster scale: checkpoint to the job's HDFS dir instead).
+# Job shape per double-round. On a small graph the cost of the loop is
+# Spark's per-job scheduling, not data (AQE runs every shuffle map stage
+# as its own job), so a round is built from as few exchanges as the
+# algebra allows — three, plus the round's checkpoint job:
+#   1. large-star as a window: m = least(a, min(b) over partitionBy(a))
+#      on the symmetrized edges — one exchange of nb, where a groupBy +
+#      join back on `a` took a partial-aggregate exchange plus a join
+#      exchange;
+#   2. small-star as a window: min(lo) over partitionBy(hi) on the
+#      large-star output, with no distinct in between — ls holds at most
+#      one row per symmetrized edge, and a duplicate (hi, lo) row changes
+#      neither the small-star minimum nor the final distinct;
+#   3. the distinct of the round's (hi, lo) output.
+# Every exchange is hash-partitioned on node ids; nothing is keyed on a
+# corpus-sized composite and there is no all-pairs anywhere.
+# localCheckpoint truncates the per-round lineage exactly like k_core's
+# peel loop (at cluster scale: checkpoint to the job's HDFS dir instead).
+#
+# Termination test: fingerprint first, one exact check at the end. Every
+# edge set (the initial one included) is .observe()d with count(*) and
+# bit_xor(xxhash64(hi, lo)); the values ride the round's localCheckpoint
+# job, so comparing a round with the previous one costs no job. (Not
+# sum(xxhash64): ANSI mode raises ARITHMETIC_OVERFLOW on it, and sum(lo)
+# would overflow at web scale; xor cannot.) Different fingerprints prove
+# the sets differ. Equal ones are confirmed exactly by _lss_same_edges
+# (both sets distinct: equal counts and count(new left_semi old) ==
+# count(new)); a collision the exact check rejects just runs another
+# round. Barring a collision, a run pays one exact check, at its end.
+#
+# Trade-off of the windows: a window buffers a partition key's whole row
+# set in one task, so a hub node's whole neighbour list sits in one task
+# (spilling past spark.sql.windowExec.buffer.spill.threshold), and AQE
+# cannot split that task the way it splits a skewed join side. A groupBy
+# + join form spreads a hub over map-side partial aggregates; on graphs
+# with heavy hubs it is the safer shape, at two more exchanges a round.
+#
+# The component size is a window too (count(*) over partitionBy(comp)),
+# which on a giant component puts that component in one task.
 #
 # The ORACLE deliberately runs a DIFFERENT algorithm — min-label
 # propagation with pointer-doubling shortcuts (comp <- min(comp[comp],
@@ -10495,48 +10529,65 @@ _LSS_MAX_ROUNDS = 16
 _LSS_ORACLE_ROUNDS = 16
 
 
+def _lss_checkpoint(edges):
+    """Materialize an (hi, lo) edge set; returns (frame, fingerprint),
+    the fingerprint {"n": count, "h": bit_xor(xxhash64(hi, lo))} taken
+    by the checkpoint job itself."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    edges = edges.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64("hi", "lo")).alias("h"),
+    ).localCheckpoint()
+    return edges, obs.get
+
+
+def _lss_same_edges(new, old, n: int) -> bool:
+    """Exact test that edge set ``new`` equals ``old`` when both hold
+    ``n`` rows and ``new`` is distinct: new ⊆ old then leaves no room
+    for an old edge outside new."""
+    return new.join(old, ["hi", "lo"], "left_semi").count() == n
+
+
 def graph_components_lss(spark, sf_dir):
     """(node_id, comp, comp_size) for every document; comp = min doc_id
     of the node's connected component in the undirected link graph."""
     docs = t(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node_id")
     )
-    e = (
-        _link_edges_undirected(spark, sf_dir)
-        .select(F.col("v").alias("hi"), F.col("u").alias("lo"))
-        .localCheckpoint()
+    e, fp = _lss_checkpoint(
+        _link_edges_undirected(spark, sf_dir).select(
+            F.col("v").alias("hi"), F.col("u").alias("lo")
+        )
     )
     for _ in range(_LSS_MAX_ROUNDS):
         # symmetrized neighborhoods: (a, b) = node a sees neighbor b
         nb = e.select(F.col("hi").alias("a"), F.col("lo").alias("b")).unionAll(
             e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
         )
-        mins = (
-            nb.groupBy("a")
-            .agg(F.min("b").alias("mn"))
-            .select("a", F.least("a", "mn").alias("m"))
-        )
-        # large-star: strictly-larger neighbors re-attach to m
+        # large-star: strictly-larger neighbors re-attach to
+        # m = min(neighborhood(a) + {a})
         ls = (
-            nb.join(mins, "a")
+            nb.select(
+                "a", "b", F.least("a", F.min("b").over(W.partitionBy("a"))).alias("m")
+            )
             .where(F.col("b") > F.col("a"))
             .select(F.col("b").alias("hi"), F.col("m").alias("lo"))
-            .distinct()
         )
         # small-star over the (hi > lo)-oriented output: each hi-group's
         # lower neighborhood (plus hi itself) re-attaches to its minimum
-        mins2 = ls.groupBy("hi").agg(F.min("lo").alias("m"))
-        ss = (
-            ls.join(mins2, "hi")
+        ss, ss_fp = _lss_checkpoint(
+            ls.select("hi", "lo", F.min("lo").over(W.partitionBy("hi")).alias("m"))
             .select("m", F.explode(F.array("lo", "hi")).alias("x"))
             .where(F.col("x") != F.col("m"))
             .select(F.col("x").alias("hi"), F.col("m").alias("lo"))
             .distinct()
-            .localCheckpoint()
         )
-        changed = ss.exceptAll(e).unionAll(e.exceptAll(ss)).count()
-        e = ss
-        if changed == 0:
+        done = ss_fp == fp and _lss_same_edges(ss, e, ss_fp["n"])
+        e, fp = ss, ss_fp
+        if done:
             break
     else:
         raise RuntimeError(
@@ -10548,12 +10599,9 @@ def graph_components_lss(spark, sf_dir):
         "node_id",
         F.coalesce("comp", F.col("node_id")).cast("long").alias("comp"),
     )
-    sizes = lab.groupBy("comp").agg(F.count("*").alias("comp_size"))
-    return (
-        lab.join(sizes, "comp")
-        .select("node_id", "comp", "comp_size")
-        .orderBy("node_id")
-    )
+    return lab.select(
+        "node_id", "comp", F.count("*").over(W.partitionBy("comp")).alias("comp_size")
+    ).orderBy("node_id")
 
 
 def _graph_components_sql() -> str:

@@ -45,7 +45,14 @@ def _read_lines(name: str, data_dir: Path | None = None) -> list[str]:
 
 
 def _read_tsv(name: str, data_dir: Path | None = None) -> list[tuple[str, ...]]:
-    return [tuple(ln.split("\t")) for ln in _read_lines(name, data_dir)]
+    # A record is any line that holds a tab, even one that is all
+    # whitespace: char_map.tsv's NBSP -> space row is "\xa0\t ", which
+    # the word-list filter (strip()) would drop.
+    return [
+        tuple(ln.split("\t"))
+        for ln in _read_text(name, data_dir).splitlines()
+        if "\t" in ln
+    ]
 
 
 @dataclass(frozen=True)

@@ -3289,6 +3289,78 @@ def test_graph_components_lss_deep_small_graph(spark, tmp_path):
     } == {(d, comp[d], sizes[comp[d]]) for d in ids}
 
 
+def test_graph_components_lss_raises_without_fixpoint(spark, monkeypatch):
+    """One double-round cannot contract the link graph to stars, so a
+    cap of one round must raise, not return an under-converged labeling."""
+    from datamunging_spark import ml_ops
+
+    monkeypatch.setattr(ml_ops, "_LSS_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="no fixpoint within 1"):
+        ml_ops.graph_components_lss(spark, SF_DIR)
+
+
+def test_lss_exact_check_rejects_a_fingerprint_collision(
+    spark, monkeypatch, tmp_path
+):
+    """The fingerprint only proves inequality: two different edge sets of
+    equal size fail the exact check, and a loop whose fingerprints always
+    collide still reaches the true fixpoint. On a path, the first round
+    keeps the edge count ((2,1),(3,2),(4,3) -> (2,1),(3,1),(4,2)), so a
+    loop that trusted equal fingerprints would stop on a non-star."""
+    from datamunging_spark import ml_ops
+
+    def edges(rows, cols="hi bigint, lo bigint"):
+        return spark.createDataFrame(rows, cols)
+
+    old = edges([(2, 1), (3, 1), (4, 3)])
+    assert ml_ops._lss_same_edges(edges([(4, 3), (2, 1), (3, 1)]), old, 3)
+    assert not ml_ops._lss_same_edges(edges([(2, 1), (3, 1), (4, 1)]), old, 3)
+    assert not ml_ops._lss_same_edges(edges([(2, 1), (3, 2), (4, 3)]), old, 3)
+
+    real = ml_ops._lss_checkpoint
+
+    def colliding(df):
+        out, fp = real(df)
+        return out, {"n": fp["n"], "h": 0}
+
+    n = 12
+    edges([(i, "x") for i in range(n)], "doc_id bigint, text string").write.parquet(
+        f"{tmp_path}/documents.parquet"
+    )
+    monkeypatch.setattr(
+        ml_ops,
+        "_link_edges_undirected",
+        lambda spark, sf_dir: edges(
+            [(i, i + 1) for i in range(n - 1)], "u bigint, v bigint"
+        ),
+    )
+    monkeypatch.setattr(ml_ops, "_lss_checkpoint", colliding)
+    got = ml_ops.graph_components_lss(spark, str(tmp_path)).toPandas()
+    assert {tuple(r) for r in got.itertuples(index=False)} == {
+        (i, 0, n) for i in range(n)
+    }
+
+
+def test_graph_components_lss_job_count(spark):
+    """Each double-round is three exchanges plus its checkpoint job, and
+    the fixpoint test rides the checkpoint, so the whole query is a few
+    jobs per round. On this fixture (local[8], 8 shuffle partitions) the
+    groupBy/join rounds with an exceptAll test per round ran 68 jobs;
+    the window rounds with the observed fingerprint run 34."""
+    from datamunging_spark.ml_ops import graph_components_lss
+
+    sc = spark.sparkContext
+    group = "test-graph-components-lss-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        graph_components_lss(spark, SF_DIR).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= 40, jobs
+
+
 # ---------------------------------------------------------------------------
 # random_walks (second-resume batch): bit-exact vs a pure-Python replica
 # of the walk contract (md5 pick over dst-ordered out-edges), plus the

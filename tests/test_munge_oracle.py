@@ -218,6 +218,16 @@ def test_engine_translate_equals_spec_translate(text):
     assert RS.translate(text) == translate(text, RS)
 
 
+def test_char_map_keeps_the_nbsp_row():
+    """char_map.tsv has 22 rows; the NBSP -> space row ("\\xa0\\t ") is
+    all whitespace and must not be dropped as a blank line, so the
+    engine and the oracle both map NBSP to a space (SPEC §2)."""
+    assert len(RS.char_map) == 22
+    assert ("\xa0", " ") in RS.char_map
+    assert RS.translate("a\xa0b") == "a b"
+    assert translate("a\xa0b", RS) == "a b"
+
+
 @pytest.mark.parametrize(
     "table",
     ["ﬁ\tfi\nfi\tf", "ſ\ts\næ\tſe", "ſ\ts\nſ\tf"],

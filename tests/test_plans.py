@@ -241,6 +241,24 @@ def test_munge_runs_one_python_task_per_core(spark, tmp_path):
     assert repartition_counts(plan_of(munge_auto(df, spark, monster_threshold=8))) == [cores]
 
 
+def test_catalog_extraction_runs_one_python_task_per_core(spark, sf_dir):
+    """The catalog operators whose repartition feeds one Python munge or
+    extraction stage run one task per core, like run_pipeline."""
+    import re
+
+    from datamunging_spark.ml_ops import (
+        extract_main_content,
+        extract_munge,
+        extract_munge_metrics,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    for op in (extract_main_content, extract_munge, extract_munge_metrics):
+        plan = plan_of(op(spark, sf_dir))
+        counts = re.findall(r"RoundRobinPartitioning\((\d+)\), REPARTITION_BY_NUM", plan)
+        assert [int(n) for n in counts] == [cores], (op.__name__, plan[:600])
+
+
 def test_split_scales_to_a_16k_span_doc(spark):
     """One ~16k-span volume becomes ceil(pages / chunk_pages) chunk rows
     whose owned spans add up to the input; no inferred filter re-derives
@@ -1143,8 +1161,8 @@ def test_second_resume_batch_plan_shapes(spark, sf_dir):
     assert "MapInPandas" not in p, p
     assert "CartesianProduct" not in p, p
 
-    # LSS components: label read-off + size join — node-keyed equi-joins
-    # only, no Python, no cartesian
+    # LSS components: label read-off join on the node key + a size
+    # window on comp — no Python, no cartesian
     p = plan_of(graph_components_lss(spark, sf_dir))
     assert "EvalPython" not in p, p
     assert "CartesianProduct" not in p, p
