@@ -10,14 +10,40 @@ same configs apply per executor. Knobs that matter at 100 TB scale:
   (or a monster chunk's), so a handful of big rows must not blow one Arrow batch
   (SURVEY.md §4 item 1 — data skew *inside* a batch, which AQE cannot fix).
 - UTC session timezone so timestamps hash identically to the DuckDB oracle.
+
+Defaults follow the host (``session_defaults``): ``local[os.cpu_count()]``
+and a driver heap of min(16g, 60% of physical RAM), so two sessions side by
+side (a test run next to a fuzz run) still fit in memory.
+
+Local JVM profile. A ``local[...]`` master's one JVM is driver and executor
+at once and runs many short jobs over small per-task data, so it starts with
+``-XX:+UseSerialGC -XX:TieredStopAtLevel=1``:
+
+- Serial GC sizes the heap by its free ratio; G1 under a large ``-Xmx``
+  commits 0.6-1.3 GB for 130-370 MB of live data, and the process's RSS
+  follows the committed heap.
+- C1-only JIT drops the C2 compiler threads, their CPU (0.9-2.6 s per call,
+  still at the 8th call) and their code-cache and arena memory.
+
+The flags go in ``spark.driver.defaultJavaOptions``, which Spark puts before
+``spark.driver.extraJavaOptions``, so a caller's own JVM options still apply
+and win. The GC flag is left out when the caller's options or the JVM option
+environment variables already choose a collector: with two, the JVM refuses
+to start. Non-local masters keep the JVM defaults: a cluster driver plans and
+collects for remote executors, a job this profile is not sized for.
 """
 
 from __future__ import annotations
 
+import hashlib
+import io
 import os
+import re
 import tempfile
 import zipfile
+from collections.abc import Mapping
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -26,6 +52,83 @@ from pyspark.sql import SparkSession
 # (at most 64 pages plus a 2-page halo each side, operators/chunked.py);
 # 64 rows/batch keeps a batch in tens of MB.
 ARROW_MAX_RECORDS_PER_BATCH = 64
+
+# Driver heap: this share of physical RAM, at most MAX_DRIVER_MEMORY_MB.
+DRIVER_MEMORY_RAM_SHARE = 0.6
+MAX_DRIVER_MEMORY_MB = 16 << 10
+
+LOCAL_GC_OPTION = "-XX:+UseSerialGC"
+LOCAL_JIT_OPTION = "-XX:TieredStopAtLevel=1"
+
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+_GC_SELECTED = re.compile(
+    r"-XX:\+Use(Serial|Parallel|ParallelOld|G1|Z|Shenandoah|Epsilon|ConcMarkSweep)GC\b"
+)
+# Environment variables whose options reach the driver JVM's command line.
+_JVM_OPTION_ENV = (
+    "JAVA_TOOL_OPTIONS",
+    "_JAVA_OPTIONS",
+    "JDK_JAVA_OPTIONS",
+    "SPARK_SUBMIT_OPTS",
+    "PYSPARK_SUBMIT_ARGS",
+)
+
+
+class SessionDefaults(NamedTuple):
+    master: str
+    shuffle_partitions: int
+    driver_memory: str
+    java_options: str  # "" keeps the JVM's own defaults
+
+
+def session_defaults(
+    master: str | None,
+    shuffle_partitions: int | None,
+    extra_conf: Mapping[str, str] | None,
+    *,
+    env: Mapping[str, str],
+    cpu_count: int,
+    ram_bytes: int | None,
+) -> SessionDefaults:
+    """What ``get_spark`` starts with on a host of ``cpu_count`` CPUs and
+    ``ram_bytes`` of physical RAM (None if unknown). Pure: the host facts and
+    the environment come in as arguments.
+
+    ``SPARK_GRAFT_CPUS`` (the ``local[...]`` width) and
+    ``SPARK_GRAFT_DRIVER_MEM`` (``spark.driver.memory``) override the host
+    values; ``extra_conf`` is applied after these and wins over them.
+    """
+    cpus = env.get("SPARK_GRAFT_CPUS", str(cpu_count))
+    if master is None:
+        master = f"local[{cpus}]"
+    if shuffle_partitions is None:
+        try:
+            shuffle_partitions = max(int(cpus), 8)
+        except ValueError:  # e.g. SPARK_GRAFT_CPUS="*"
+            shuffle_partitions = max(cpu_count, 8)
+
+    driver_memory = env.get("SPARK_GRAFT_DRIVER_MEM")
+    if driver_memory is None:
+        mb = MAX_DRIVER_MEMORY_MB
+        if ram_bytes:
+            mb = min(mb, int(ram_bytes * DRIVER_MEMORY_RAM_SHARE) >> 20)
+        driver_memory = f"{mb}m"
+
+    java_options = []
+    if _LOCAL_MASTER.fullmatch(master):
+        chosen = [env.get(k, "") for k in _JVM_OPTION_ENV]
+        chosen.append((extra_conf or {}).get("spark.driver.extraJavaOptions", ""))
+        if not any(_GC_SELECTED.search(opts) for opts in chosen):
+            java_options.append(LOCAL_GC_OPTION)
+        java_options.append(LOCAL_JIT_OPTION)
+    return SessionDefaults(master, shuffle_partitions, driver_memory, " ".join(java_options))
+
+
+def _physical_ram_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return None
 
 
 def get_spark(
@@ -36,24 +139,24 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's default tuning.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    On a real cluster, pass ``master=None`` after spark-submit has set the
-    master, or simply let spark-submit's conf win: ``getOrCreate`` reuses
-    an existing session.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
+    ``os.cpu_count()``); see ``session_defaults`` for the derived defaults
+    and the module docstring for the local JVM profile. On a real cluster,
+    pass ``master=None`` after spark-submit has set the master, or simply
+    let spark-submit's conf win: ``getOrCreate`` reuses an existing session.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if master is None:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(int(cpus), 8)
-        except ValueError:
-            shuffle_partitions = 32
-
+    d = session_defaults(
+        master,
+        shuffle_partitions,
+        extra_conf,
+        env=os.environ,
+        cpu_count=os.cpu_count() or 1,
+        ram_bytes=_physical_ram_bytes(),
+    )
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .master(d.master)
+        .config("spark.sql.shuffle.partitions", str(d.shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -64,9 +167,11 @@ def get_spark(
             str(ARROW_MAX_RECORDS_PER_BATCH),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", d.driver_memory)
         .config("spark.sql.files.maxPartitionBytes", "134217728")  # 128 MiB
     )
+    if d.java_options:
+        builder = builder.config("spark.driver.defaultJavaOptions", d.java_options)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -92,11 +197,42 @@ def _ship_package(spark: SparkSession) -> None:
         # the package to driver and executors; nothing to re-zip
         setattr(spark, key, True)
         return
-    zpath = Path(tempfile.gettempdir()) / "datamunging_spark_pyfiles.zip"
-    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
+    zpath = _package_zip(pkg_dir, Path(tempfile.gettempdir()))
+    spark.sparkContext.addPyFile(str(zpath))
+    setattr(spark, key, True)
+
+
+def _package_zip(pkg_dir: Path, out_dir: Path) -> Path:
+    """Zip ``pkg_dir`` (without ``__pycache__``) into ``out_dir`` under a
+    name that is a hash of the archive's bytes.
+
+    Concurrent sessions share ``out_dir``, and an executor may read the zip
+    while another session ships its own. The archive is built in memory
+    with fixed entry timestamps, so the same sources give the same bytes
+    and the same name, then written to a temp file in ``out_dir`` and
+    renamed into place: the final path only ever holds a whole archive.
+    """
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
         for f in sorted(pkg_dir.rglob("*")):
             if "__pycache__" in f.parts or not f.is_file():
                 continue
-            zf.write(f, Path(pkg_dir.name) / f.relative_to(pkg_dir))
-    spark.sparkContext.addPyFile(str(zpath))
-    setattr(spark, key, True)
+            arcname = (Path(pkg_dir.name) / f.relative_to(pkg_dir)).as_posix()
+            info = zipfile.ZipInfo(arcname, date_time=(1980, 1, 1, 0, 0, 0))
+            info.compress_type = zipfile.ZIP_DEFLATED
+            zf.writestr(info, f.read_bytes())
+    data = buf.getvalue()
+    digest = hashlib.sha256(data).hexdigest()[:16]
+    zpath = out_dir / f"{pkg_dir.name}_pyfiles-{digest}.zip"
+    if zpath.exists():
+        return zpath
+    fd, tmp = tempfile.mkstemp(dir=out_dir, prefix=f".{zpath.name}.", suffix=".tmp")
+    try:
+        with os.fdopen(fd, "wb") as fh:
+            os.fchmod(fh.fileno(), 0o644)  # mkstemp's 0600 would lock out other users
+            fh.write(data)
+        os.replace(tmp, zpath)
+    except BaseException:
+        Path(tmp).unlink(missing_ok=True)
+        raise
+    return zpath
