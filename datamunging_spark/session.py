@@ -11,26 +11,35 @@ same configs apply per executor. Knobs that matter at 100 TB scale:
   (SURVEY.md §4 item 1 — data skew *inside* a batch, which AQE cannot fix).
 - UTC session timezone so timestamps hash identically to the DuckDB oracle.
 
-Defaults follow the host (``session_defaults``): ``local[os.cpu_count()]``
-and a driver heap of min(16g, 60% of physical RAM), so two sessions side by
-side (a test run next to a fuzz run) still fit in memory.
+Defaults follow the host (``session_defaults``): ``local[N]`` over the N
+CPUs this process may run on (its affinity mask) and a driver heap of
+min(16g, 60% of RAM), where RAM is the smaller of physical memory and the
+process's cgroup memory limit. Two sessions side by side (a test run next
+to a fuzz run) then still fit in memory.
 
-Local JVM profile. A ``local[...]`` master's one JVM is driver and executor
-at once and runs many short jobs over small per-task data, so it starts with
-``-XX:+UseSerialGC -XX:TieredStopAtLevel=1``:
+Serial GC for narrow local masters. A ``local[...]`` master of at most
+``SERIAL_GC_MAX_THREADS`` task threads starts its JVM with
+``-XX:+UseSerialGC``. That one JVM is driver and executor at once, over
+small per-task data. Serial GC sizes the heap by its free ratio, while G1
+under a large ``-Xmx`` commits 0.6-1.3 GB for 130-370 MB of live data, and
+the process's RSS follows the committed heap. A Serial pause stops every
+task thread while one thread collects, so its cost grows with the width:
+wider local masters keep G1. Non-local masters keep the JVM defaults too: a
+cluster driver plans and collects for remote executors, a job this choice
+is not sized for.
 
-- Serial GC sizes the heap by its free ratio; G1 under a large ``-Xmx``
-  commits 0.6-1.3 GB for 130-370 MB of live data, and the process's RSS
-  follows the committed heap.
-- C1-only JIT drops the C2 compiler threads, their CPU (0.9-2.6 s per call,
-  still at the 8th call) and their code-cache and arena memory.
+The flag goes in ``spark.driver.defaultJavaOptions``, which Spark puts
+before ``spark.driver.extraJavaOptions``, so a caller's own JVM options
+still apply and win. It is left out when the caller's options or the JVM
+option environment variables already choose a collector: with two, the JVM
+refuses to start.
 
-The flags go in ``spark.driver.defaultJavaOptions``, which Spark puts before
-``spark.driver.extraJavaOptions``, so a caller's own JVM options still apply
-and win. The GC flag is left out when the caller's options or the JVM option
-environment variables already choose a collector: with two, the JVM refuses
-to start. Non-local masters keep the JVM defaults: a cluster driver plans and
-collects for remote executors, a job this profile is not sized for.
+C1-only JIT (``-XX:TieredStopAtLevel=1``) is not set. It cuts the JIT's
+CPU and memory in short sessions, but with Serial GC it made a five-minute
+run of the query catalog 14-38% slower than Serial GC alone, at both 2 and
+4 task threads, and nothing seen at start tells a short session from a long
+one. A caller whose sessions are short can pass it in
+``spark.driver.extraJavaOptions``.
 """
 
 from __future__ import annotations
@@ -57,10 +66,14 @@ ARROW_MAX_RECORDS_PER_BATCH = 64
 DRIVER_MEMORY_RAM_SHARE = 0.6
 MAX_DRIVER_MEMORY_MB = 16 << 10
 
-LOCAL_GC_OPTION = "-XX:+UseSerialGC"
-LOCAL_JIT_OPTION = "-XX:TieredStopAtLevel=1"
+SERIAL_GC_OPTION = "-XX:+UseSerialGC"
+# Widest local master that gets Serial GC. At 2 task threads it cut peak RSS
+# by about a quarter, and at 2 and 4 a five-minute query-catalog run took
+# +3% and -10% against G1. Wider sessions were not measured with it alone.
+SERIAL_GC_MAX_THREADS = 4
 
-_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+# local, local[N], local[*], local[N,F], local[*,F]; not local-cluster[...]
+_LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:,\d+)?\])?")
 _GC_SELECTED = re.compile(
     r"-XX:\+Use(Serial|Parallel|ParallelOld|G1|Z|Shenandoah|Epsilon|ConcMarkSweep)GC\b"
 )
@@ -90,8 +103,8 @@ def session_defaults(
     cpu_count: int,
     ram_bytes: int | None,
 ) -> SessionDefaults:
-    """What ``get_spark`` starts with on a host of ``cpu_count`` CPUs and
-    ``ram_bytes`` of physical RAM (None if unknown). Pure: the host facts and
+    """What ``get_spark`` starts with when the process may use ``cpu_count``
+    CPUs and ``ram_bytes`` of RAM (None if unknown). Pure: the host facts and
     the environment come in as arguments.
 
     ``SPARK_GRAFT_CPUS`` (the ``local[...]`` width) and
@@ -114,21 +127,74 @@ def session_defaults(
             mb = min(mb, int(ram_bytes * DRIVER_MEMORY_RAM_SHARE) >> 20)
         driver_memory = f"{mb}m"
 
-    java_options = []
-    if _LOCAL_MASTER.fullmatch(master):
+    java_options = ""
+    width = _local_width(master, cpu_count)
+    if width is not None and width <= SERIAL_GC_MAX_THREADS:
         chosen = [env.get(k, "") for k in _JVM_OPTION_ENV]
         chosen.append((extra_conf or {}).get("spark.driver.extraJavaOptions", ""))
         if not any(_GC_SELECTED.search(opts) for opts in chosen):
-            java_options.append(LOCAL_GC_OPTION)
-        java_options.append(LOCAL_JIT_OPTION)
-    return SessionDefaults(master, shuffle_partitions, driver_memory, " ".join(java_options))
+            java_options = SERIAL_GC_OPTION
+    return SessionDefaults(master, shuffle_partitions, driver_memory, java_options)
 
 
-def _physical_ram_bytes() -> int | None:
-    try:
-        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    except (AttributeError, OSError, ValueError):
+def _local_width(master: str, cpu_count: int) -> int | None:
+    """Task threads of a ``local`` master; None for any other master."""
+    m = _LOCAL_MASTER.fullmatch(master)
+    if m is None:
         return None
+    if m.group(1) is None:
+        return 1
+    return cpu_count if m.group(1) == "*" else int(m.group(1))
+
+
+def _usable_cpus() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except (AttributeError, OSError):
+        return os.cpu_count() or 1
+
+
+def _ram_bytes(
+    cgroup_root: Path = Path("/sys/fs/cgroup"),
+    proc_cgroup: Path = Path("/proc/self/cgroup"),
+) -> int | None:
+    """Physical RAM, or this process's cgroup memory limit if smaller."""
+    limit = _cgroup_memory_limit(cgroup_root, proc_cgroup)
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return limit
+    return ram if limit is None else min(ram, limit)
+
+
+def _cgroup_memory_limit(cgroup_root: Path, proc_cgroup: Path) -> int | None:
+    """The tightest memory limit on this process's cgroup and its ancestors,
+    v2 (``memory.max``) or v1 (``memory.limit_in_bytes``); None if none."""
+    try:
+        lines = proc_cgroup.read_text().splitlines()
+    except OSError:
+        return None
+    limits = []
+    for line in lines:
+        hierarchy, controllers, path = line.split(":", 2)
+        if hierarchy == "0" and not controllers:
+            base, name = cgroup_root, "memory.max"
+        elif "memory" in controllers.split(","):
+            base, name = cgroup_root / "memory", "memory.limit_in_bytes"
+        else:
+            continue
+        d = base / path.lstrip("/")
+        for directory in (d, *d.parents):
+            try:
+                value = (directory / name).read_text().strip()
+            except OSError:
+                value = ""
+            # "max" (v2) or a page-rounded 2**63 (v1) means no limit
+            if value.isdigit() and int(value) < 1 << 62:
+                limits.append(int(value))
+            if directory == base:
+                break
+    return min(limits, default=None)
 
 
 def get_spark(
@@ -139,19 +205,20 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's default tuning.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
-    ``os.cpu_count()``); see ``session_defaults`` for the derived defaults
-    and the module docstring for the local JVM profile. On a real cluster,
-    pass ``master=None`` after spark-submit has set the master, or simply
-    let spark-submit's conf win: ``getOrCreate`` reuses an existing session.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default the
+    CPUs this process may run on); see ``session_defaults`` for the derived
+    defaults and the module docstring for the JVM's collector. On a real
+    cluster, pass ``master=None`` after spark-submit has set the master, or
+    simply let spark-submit's conf win: ``getOrCreate`` reuses an existing
+    session.
     """
     d = session_defaults(
         master,
         shuffle_partitions,
         extra_conf,
         env=os.environ,
-        cpu_count=os.cpu_count() or 1,
-        ram_bytes=_physical_ram_bytes(),
+        cpu_count=_usable_cpus(),
+        ram_bytes=_ram_bytes(),
     )
     builder = (
         SparkSession.builder.appName(app_name)
