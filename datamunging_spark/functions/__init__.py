@@ -1,3 +1,4 @@
+from .hashing import md5_long
 from .text import (
     tokens_distinct,
     word_shingles,
@@ -8,6 +9,7 @@ from .text import (
 from .vectors import cosine, cosine_to_literal, dot, l2_norm, hyperplane_bucket
 
 __all__ = [
+    "md5_long",
     "tokens_distinct",
     "word_shingles",
     "stopword_hits",

@@ -22,11 +22,12 @@ Scale notes (the point of each design):
 
 from __future__ import annotations
 
-from typing import Iterator
+import itertools
+from typing import Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window as W
 
 from .functions import (
@@ -35,6 +36,7 @@ from .functions import (
     dot,
     hyperplane_bucket,
     l2_norm,
+    md5_long,
     normalized_fingerprint,
     regex_tokens,
     stopword_hits,
@@ -46,6 +48,95 @@ from .queries import t
 STOPWORDS_EN = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "value"]
 STOPWORDS_DE = ["der", "die", "das", "und", "ist", "von", "mit", "ein", "zu"]
 STOPWORDS_FR = ["le", "la", "les", "et", "de", "un", "une", "est", "pour"]
+
+
+def _md5_long(tag, key_col):
+    """Tagged md5 int64 — composes the module's core md5_long idiom."""
+    return md5_long(F.concat(F.lit(tag), key_col.cast("string")))
+
+
+def _md5_u01(tag, key_col):
+    """md5-uniform in [0,1) keyed on (tag, key) — engine-replayable."""
+    return _md5_long(tag, key_col) / F.lit(float(1 << 60))
+
+
+# --------------------------------------------------------------------------
+# fixpoint(): one loop for every query that iterates to a fixpoint. Seven
+# catalog queries iterate a DataFrame until a round no longer changes
+# it: connected_components (min-label propagation), k_core and k_truss
+# (peeling), thread_roots (pointer doubling), bfs_levels (frontier
+# waves), graph_components_lss (star contraction) and dbscan_grid
+# (min-label propagation over cells). Each
+# supplies its round as a DataFrame -> DataFrame step; fixpoint() owns the
+# loop and the stopping rule:
+#   - every state, the initial one included, is localCheckpoint-ed, which
+#     cuts the per-round lineage so plans stay O(1) deep (at cluster
+#     scale: a checkpoint to the job's storage);
+#   - each checkpoint is .observe()d with count(*) and
+#     bit_xor(xxhash64(*columns)), so the fingerprint comes out of the
+#     checkpoint job and comparing a round with the previous one costs no
+#     job. (Not sum(xxhash64): ANSI mode raises ARITHMETIC_OVERFLOW on it;
+#     xor cannot overflow.) Different fingerprints prove the states
+#     differ;
+#   - equal fingerprints are confirmed exactly: equal counts and
+#     count(new LEFT SEMI old on every column) == count(new). A collision
+#     the check rejects just runs another round; barring one, a run pays
+#     one exact check, at its end;
+#   - past max_rounds it raises, so a query returns its true fixpoint or
+#     fails loudly, never an under-converged answer.
+# Round r compares state r with state r - 1 (state 0 is the initial one).
+# --------------------------------------------------------------------------
+
+
+def _checkpoint_fingerprinted(df: DataFrame) -> tuple[DataFrame, dict]:
+    """localCheckpoint ``df``; returns (frame, fingerprint), the
+    fingerprint {"n": count(*), "h": bit_xor(xxhash64(*columns))} taken
+    by the checkpoint job itself."""
+    obs = Observation()
+    df = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64(*df.columns)).alias("h"),
+    ).localCheckpoint()
+    return df, obs.get
+
+
+def _same_rows(new: DataFrame, old: DataFrame, n: int) -> bool:
+    """Exact test that ``new`` equals ``old`` when both hold ``n`` rows and
+    both are distinct: new ⊆ old then leaves no room for an old row
+    outside new."""
+    return new.join(old, new.columns, "left_semi").count() == n
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    name: str,
+    max_rounds: int,
+) -> DataFrame:
+    """Apply ``step`` to ``state`` until a round returns the rows it was
+    given, and return that (checkpointed) state.
+
+    Precondition: ``state`` and every ``step`` output are distinct sets of
+    rows (each caller keys its state or ends its step with a distinct).
+    The exact check compares rows with ``=`` on every column, which is
+    set equality only for distinct sets; a NULL never compares equal, so
+    a state holding one fails the check and the loop raises rather than
+    stopping early.
+
+    Raises ``RuntimeError`` naming ``name`` when ``max_rounds`` rounds
+    reach no fixpoint.
+    """
+    state, fp = _checkpoint_fingerprinted(state)
+    for _ in range(max_rounds):
+        new, new_fp = _checkpoint_fingerprinted(step(state))
+        done = new_fp == fp and _same_rows(new, state, new_fp["n"])
+        state, fp = new, new_fp
+        if done:
+            return state
+    raise RuntimeError(
+        f"{name} did not converge: no fixpoint within {max_rounds} rounds"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -157,13 +248,6 @@ _MASK64 = 2**64
 # hash mod 2^64), identical literals in the numpy UDF and the oracle SQL.
 _MINHASH_A = [((2 * k + 1) * 0x9E3779B97F4A7C15) % _MASK64 for k in range(N_HASHES)]
 _MINHASH_B = [(k * 0xBF58476D1CE4E5B9) % _MASK64 for k in range(N_HASHES)]
-
-
-def md5_long(c):
-    """First 60 bits of md5 as a non-negative int64 — computed
-    identically in Spark (conv base16) and DuckDB
-    (``CAST(concat('0x', substr(md5(x),1,15)) AS BIGINT)``)."""
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
 def _with_shingles(
@@ -650,9 +734,7 @@ def winnow_fingerprint(spark, sf_dir):
     )
     txt = F.lower(F.col("text"))
     m = F.length("text") - WINNOW_K + 1  # number of k-grams
-    gram_hash = lambda i: F.conv(  # noqa: E731
-        F.substring(F.md5(txt.substr(i, F.lit(WINNOW_K))), 1, 15), 16, 10
-    ).cast("long")
+    gram_hash = lambda i: md5_long(txt.substr(i, F.lit(WINNOW_K)))  # noqa: E731
     grams = docs.select(
         "doc_id",
         m.alias("m"),
@@ -2667,11 +2749,10 @@ ML_QUERIES["token_stats_bpe"] = (token_stats_bpe, TOKEN_STATS_BPE_SQL)
 #
 # Spark side: iterative min-label propagation (each round: ship every
 # node's current label to its neighbors, keep the minimum; labels are
-# monotone non-increasing, so the loop converges in <= graph-diameter
-# rounds). Each iteration is one shuffle keyed by dst + one self-join;
-# lineage is cut with localCheckpoint per round so plans stay O(1) deep.
-# Near-dup graphs are dense and low-diameter (clusters are near-cliques),
-# so this beats the O(log n)-round large-star/small-star contraction
+# monotone non-increasing, so the labels settle in <= graph-diameter
+# rounds), run by fixpoint(). Each round is one shuffle keyed by dst +
+# one self-join. Near-dup graphs are dense and low-diameter (clusters
+# are near-cliques), so this beats the O(log n)-round large-star/small-star contraction
 # (Kiveris et al., "Connected Components in MapReduce and Beyond") in
 # practice; swap in star contraction if cluster diameters are adversarial.
 #
@@ -2681,8 +2762,6 @@ ML_QUERIES["token_stats_bpe"] = (token_stats_bpe, TOKEN_STATS_BPE_SQL)
 # --------------------------------------------------------------------------
 
 CC_MAX_ITERS = 15
-
-_UNSET = object()  # convergence-probe sentinel (None is a valid sum)
 
 
 N_PAIR_BUCKETS = 8  # B: all-pairs work spreads over B(B+1)/2 cells/block
@@ -2856,16 +2935,15 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
         .repartition(par, "dst")
         .localCheckpoint()
     )
+    # keyed by doc_id (distinct sources; each round keeps one row per
+    # label-table row)
     labels = (
         sym.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("cluster", F.col("doc_id"))
-        .localCheckpoint()
     )
-    # max_iters bounds PROPAGATION rounds; fixpoint detection needs one
-    # extra round to observe sum-unchanged, so a diameter-max_iters
-    # graph converges without tripping the non-convergence guard.
-    for _ in range(max_iters + 1):
+
+    def propagate(labels):
         neigh = (
             sym.join(
                 labels.select(
@@ -2877,45 +2955,17 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
             .agg(F.min("c").alias("nc"))
             .withColumnRenamed("src", "doc_id")
         )
-        new = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster"), F.coalesce("nc", F.col("cluster"))
-                ).alias("cluster"),
-            )
-            .localCheckpoint(eager=False)
+        return labels.join(neigh, "doc_id", "left").select(
+            "doc_id",
+            F.least(
+                F.col("cluster"), F.coalesce("nc", F.col("cluster"))
+            ).alias("cluster"),
         )
-        # Labels are monotone non-increasing, so sum(cluster) strictly
-        # decreases iff anything changed — one cheap aggregate per round
-        # instead of a join + count; with the LAZY checkpoint above this
-        # probe is also the action that materializes the round, so each
-        # iteration costs exactly one job. (At 10^12 docs switch the
-        # probe to sum over DECIMAL or (count, avg) to dodge int64
-        # overflow.)
-        new_sum = new.agg(F.sum("cluster")).collect()[0][0]
-        # sentinel (not None): sum() over an empty label set is None, and
-        # None == None must still count as a detected fixpoint
-        prev_sum = getattr(labels, "_cc_sum", _UNSET)
-        labels = new
-        labels._cc_sum = new_sum
-        if prev_sum is not _UNSET and new_sum == prev_sum:
-            break
-    else:
-        # max_iters is a safety bound, not a silent truncation: a
-        # component with diameter > max_iters would otherwise be split
-        # into several clusters with no error (e.g. a long chain of
-        # template-drift near-dups), corrupting every downstream
-        # keep/drop decision. The sum probe already ran, so detecting
-        # this costs nothing.
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iters} "
-            "label-propagation rounds (component diameter exceeds the "
-            "iteration bound); raise max_iters or switch to star "
-            "contraction for adversarial graphs"
-        )
-    return labels
+
+    # max_iters bounds PROPAGATION rounds; seeing the fixpoint takes one
+    # more, so a diameter-max_iters graph converges and a deeper one
+    # raises instead of being split into several clusters without error
+    return fixpoint(labels, propagate, "connected_components", max_iters + 1)
 
 
 def dedup_clusters(spark, sf_dir):
@@ -3012,23 +3062,12 @@ ML_QUERIES["dedup_representatives"] = (
 # --------------------------------------------------------------------------
 
 
-def _md5_bucket(col, salt: str, mod: int):
-    """First 15 md5 hex chars of (salt || value) as int64, mod N —
-    uniform, deterministic, engine-independent."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), col.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    return h % mod
-
-
 def hash_split(spark, sf_dir):
     """80/10/10 train/valid/test split by md5 bucket of doc_id; returns
     the per-split per-lang manifest (counts + size) used to sanity-check
     balance. At 10^12 docs this is a scan + one small aggregation."""
     docs = t(spark, sf_dir, "documents")
-    bucket = _md5_bucket(F.col("doc_id"), "split:", 100)
+    bucket = _md5_long("split:", F.col("doc_id")) % 100
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test")
     )
@@ -3069,7 +3108,7 @@ def stratified_sample(spark, sf_dir, k: int = 20):
     at scale pre-filter with a bucket predicate (md5 % m < ceil) so the
     window only ranks ~k·fudge rows per stratum instead of the corpus."""
     docs = t(spark, sf_dir, "documents")
-    h = _md5_bucket(F.col("doc_id"), "sample:", 1_000_000_007)
+    h = _md5_long("sample:", F.col("doc_id")) % 1_000_000_007
     w = W.partitionBy("lang").orderBy(F.asc("h"), F.asc("doc_id"))
     return (
         docs.select("doc_id", "lang", h.alias("h"))
@@ -3166,7 +3205,7 @@ def curate_corpus(spark, sf_dir):
         & (distinct_ratio >= CURATE_MIN_DISTINCT_RATIO)
     )
     # 3. deterministic split + 4. manifest
-    bucket = _md5_bucket(F.col("doc_id"), "split:", 100)
+    bucket = _md5_long("split:", F.col("doc_id")) % 100
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test")
     )
@@ -3855,7 +3894,7 @@ URL_BLOCKLIST = ["src3", "src7", "src13"]
 
 
 def _url_tld(source_col):
-    b = _md5_bucket(source_col, "tld:", 3)
+    b = _md5_long("tld:", source_col) % 3
     return (
         F.when(b == 0, "com").when(b == 1, "org").otherwise("net")
     )
@@ -3957,17 +3996,8 @@ def quality_classifier(spark, sf_dir):
     words = F.split(F.lower(F.col("text")), " ")
 
     def weight(tok):
-        b = (
-            F.conv(F.substring(F.md5(F.concat(F.lit("qb:"), tok)), 1, 15),
-                   16, 10).cast("long") % QC_BUCKETS
-        )
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("qw:"), b.cast("string"))), 1, 15
-                ), 16, 10,
-            ).cast("long") % 2001 - 1000
-        ) / 1000.0
+        b = _md5_long("qb:", tok) % QC_BUCKETS
+        return (_md5_long("qw:", b) % 2001 - 1000) / 1000.0
 
     margin = F.aggregate(
         F.transform(words, weight), F.lit(0.0), lambda acc, x: acc + x
@@ -4028,8 +4058,8 @@ SHUFFLE_SHARDS = 8
 def global_shuffle(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     key = F.md5(F.concat(F.lit("shuffle:42:"), F.col("doc_id").cast("string")))
-    shard = _md5_bucket(F.col("doc_id"), "shard:", SHUFFLE_SHARDS)
-    h = _md5_bucket(F.col("doc_id"), "dig:", 1000003)
+    shard = _md5_long("shard:", F.col("doc_id")) % SHUFFLE_SHARDS
+    h = _md5_long("dig:", F.col("doc_id")) % 1000003
     by_shard = W.partitionBy("shard").orderBy("key")
     return (
         docs.select(
@@ -4358,18 +4388,14 @@ def span_corruption(spark, sf_dir):
 
     def block_masked(i):
         # md5-uniform in [0,1) keyed on (doc_id, block index)
-        u = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("corrupt:"),
-                                   F.col("doc_id").cast("string"),
-                                   F.lit(":"),
-                                   (i / CORRUPT_SPAN_LEN).cast("int")
-                                   .cast("string"))),
-                    1, 15,
-                ), 16, 10,
-            ).cast("long") / F.lit(float(1 << 60))
-        )
+        u = md5_long(
+            F.concat(
+                F.lit("corrupt:"),
+                F.col("doc_id").cast("string"),
+                F.lit(":"),
+                (i / CORRUPT_SPAN_LEN).cast("int").cast("string"),
+            )
+        ) / F.lit(float(1 << 60))
         return u < CORRUPT_MASK_RATE
 
     idx = F.sequence(F.lit(0), F.size(words) - 1)
@@ -4439,11 +4465,7 @@ def importance_resample(spark, sf_dir):
     toks = docs.select(
         "doc_id", "lang",
         F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"),
-    ).withColumn(
-        "b",
-        F.conv(F.substring(F.md5(F.concat(F.lit("dsir:"), F.col("tok"))),
-                           1, 15), 16, 10).cast("long") % DSIR_BUCKETS,
-    )
+    ).withColumn("b", _md5_long("dsir:", F.col("tok")) % DSIR_BUCKETS)
     # add-one-smoothed bucket log-probs for target (en) and raw corpus.
     # r5 (VERDICT r4 "What's wrong" #3): the r4 shape ran TWO separate
     # .collect() jobs just to fetch tgt_total/raw_total scalars, then a
@@ -4471,12 +4493,7 @@ def importance_resample(spark, sf_dir):
         .groupBy("doc_id")
         .agg(F.round(F.avg("llr"), 6).alias("importance"))
     )
-    coin = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("dsirkeep:"),
-                                          F.col("doc_id").cast("string"))),
-                           1, 15), 16, 10).cast("long")
-        / F.lit(float(1 << 60))
-    )
+    coin = _md5_u01("dsirkeep:", F.col("doc_id"))
     # keep rule: sigmoid(importance · 8) vs the md5 coin — deterministic,
     # engine-replayable, monotone in the importance weight
     keep = coin < 1.0 / (1.0 + F.exp(-8.0 * F.col("importance")))
@@ -5654,6 +5671,26 @@ _PR_ITERS = 3
 _PR_DANGLE_MOD = 17  # doc_id % 17 == 3 -> no out-edges (forced dangling)
 
 
+def _md5_links(docs: DataFrame, n: int, tag: str, drop_dangling: bool) -> DataFrame:
+    """(src, dst) rows of the synthesized link graph over ``docs``'
+    doc_id: each doc links to md5("{tag}{j}:" || doc_id) % n for j = 0,
+    1, 2, self-loops dropped and duplicates kept (callers add their own
+    distinct). ``drop_dangling`` gives every doc with doc_id %
+    _PR_DANGLE_MOD == 3 no out-links."""
+
+    def h(j: int) -> str:
+        return (
+            f"(CAST(conv(substring(md5(concat('{tag}{j}:', "
+            f"CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % {n})"
+        )
+
+    if drop_dangling:
+        docs = docs.where(F.expr(f"doc_id % {_PR_DANGLE_MOD} <> 3"))
+    return docs.selectExpr(
+        "doc_id AS src", f"explode(array({h(0)}, {h(1)}, {h(2)})) AS dst"
+    ).where("dst <> src")
+
+
 def pagerank_links(spark, sf_dir, n_iters: int = _PR_ITERS):
     """K power iterations of fixed-point PageRank (d = 0.85) over the
     synthesized link graph; returns (node_id, outdeg, rank_fp) for
@@ -5664,21 +5701,7 @@ def pagerank_links(spark, sf_dir, n_iters: int = _PR_ITERS):
     n = docs.count()
     teleport = (15 * _PR_SCALE) // 100
 
-    def h(j: int) -> str:
-        return (
-            f"(CAST(conv(substring(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % {n})"
-        )
-
-    edges = (
-        docs.where(F.expr(f"doc_id % {_PR_DANGLE_MOD} <> 3"))
-        .selectExpr(
-            "doc_id AS src",
-            f"explode(array({h(0)}, {h(1)}, {h(2)})) AS dst",
-        )
-        .where("dst <> src")
-        .distinct()
-    )
+    edges = _md5_links(docs, n, "pr", drop_dangling=True).distinct()
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     ranks = docs.select(
         F.col("doc_id").alias("id"),
@@ -6145,16 +6168,6 @@ ML_QUERIES["embedding_quantize"] = (embedding_quantize, _sq8_sql())
 FIM_RATE = 0.5  # fraction of docs converted to PSM examples
 
 
-def _md5_long(tag, key_col):
-    """Tagged md5 int64 — composes the module's core md5_long idiom."""
-    return md5_long(F.concat(F.lit(tag), key_col.cast("string")))
-
-
-def _md5_u01(tag, key_col):
-    """md5-uniform in [0,1) keyed on (tag, key) — engine-replayable."""
-    return _md5_long(tag, key_col) / F.lit(float(1 << 60))
-
-
 def fim_transform(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     w = F.split(F.col("text"), " ")
@@ -6560,19 +6573,9 @@ def anchor_text_agg(spark, sf_dir):
     n = docs.count()  # driver-side model scalar (same audit class as
     # pagerank's node count): sizes the synthesized dst space
 
-    def h(j: int) -> str:
-        return (
-            f"(CAST(conv(substring(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % {n})"
-        )
-
     vocab = F.array(*[F.lit(a) for a in _ANCHOR_VOCAB])
     edges = (
-        docs.selectExpr(
-            "doc_id AS src",
-            f"explode(array({h(0)}, {h(1)}, {h(2)})) AS dst",
-        )
-        .where("dst <> src")
+        _md5_links(docs, n, "pr", drop_dangling=False)
         .withColumn(
             "anchor",
             F.element_at(
@@ -7246,21 +7249,7 @@ def _link_edges_undirected(spark, sf_dir):
     direction collapsed."""
     docs = t(spark, sf_dir, "documents").select("doc_id")
     n = docs.count()
-
-    def h(j: int) -> str:
-        return (
-            f"(CAST(conv(substring(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % {n})"
-        )
-
-    directed = (
-        docs.where(F.expr(f"doc_id % {_PR_DANGLE_MOD} <> 3"))
-        .selectExpr(
-            "doc_id AS src",
-            f"explode(array({h(0)}, {h(1)}, {h(2)})) AS dst",
-        )
-        .where("dst <> src")
-    )
+    directed = _md5_links(docs, n, "pr", drop_dangling=True)
     return directed.select(
         F.least("src", "dst").alias("u"),
         F.greatest("src", "dst").alias("v"),
@@ -7862,18 +7851,11 @@ ML_QUERIES["fuzzy_join_shingles"] = (fuzzy_join_shingles, _fuzzy_join_sql())
 # mass) and it is the third member of this engine's iterative-graph
 # family (pagerank_links: fixed-point power iteration; dedup_clusters:
 # min-label propagation; k_core: monotone peeling).
-# Iteration contract (the dedup_clusters pattern): the engine loops a
-# degree-filter round — one map-side-combinable degree agg + two
-# LEFT SEMI joins pruning the edge list — until the edge count is
-# stable, RAISING if convergence takes more than _KCORE_MAX_ROUNDS
-# (peeling is monotone, so the edge count is strictly decreasing until
-# fixpoint). The DuckDB oracle unrolls exactly _KCORE_MAX_ROUNDS
-# rounds: monotonicity makes post-convergence rounds no-ops, so the
-# unrolled replay equals the early-stopped engine. Per-round edge
-# counts are driver-side model state (the audited collect class);
-# localCheckpoint cuts the per-round lineage so the plan doesn't grow
-# quadratically with rounds — at 10^12 edges this is a checkpoint to
-# cluster storage.
+# Each fixpoint() round is a degree filter: one map-side-combinable
+# degree agg + two LEFT SEMI joins pruning the edge list. The DuckDB
+# oracle unrolls exactly _KCORE_MAX_ROUNDS rounds: peeling is monotone,
+# so post-convergence rounds are no-ops and the unrolled replay equals
+# the early-stopped engine.
 # --------------------------------------------------------------------------
 
 KCORE_K = 4
@@ -7896,26 +7878,18 @@ def _edge_degrees(edges):
 
 
 def k_core(spark, sf_dir, k: int = KCORE_K):
-    edges = _link_edges_undirected(spark, sf_dir).localCheckpoint()
-    n_edges = edges.count()
-    for _ in range(_KCORE_MAX_ROUNDS):
+    def peel(edges):
         keep = _edge_degrees(edges).where(F.col("d") >= k).select("id")
-        edges = (
-            edges.join(
-                keep.select(F.col("id").alias("u")), "u", "left_semi"
-            )
+        return (
+            edges.join(keep.select(F.col("id").alias("u")), "u", "left_semi")
             .join(keep.select(F.col("id").alias("v")), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint()
         )
-        n_new = edges.count()
-        if n_new == n_edges:
-            break
-        n_edges = n_new
-    else:
-        raise RuntimeError(
-            f"k_core: no fixpoint within {_KCORE_MAX_ROUNDS} rounds"
-        )
+
+    # the edge list is distinct, and semi-join filters keep it so
+    edges = fixpoint(
+        _link_edges_undirected(spark, sf_dir), peel, "k_core", _KCORE_MAX_ROUNDS
+    )
     return (
         _edge_degrees(edges)
         .select(F.col("id").alias("node_id"), F.col("d").cast("long").alias("core_deg"))
@@ -8486,21 +8460,7 @@ _HITS_ITERS = 2
 def hits_scores(spark, sf_dir, n_iters: int = _HITS_ITERS):
     docs = t(spark, sf_dir, "documents").select("doc_id")
     n = docs.count()
-
-    def h(j: int) -> str:
-        return (
-            f"(CAST(conv(substring(md5(concat('ht{j}:', "
-            f"CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % {n})"
-        )
-
-    edges = (
-        docs.selectExpr(
-            "doc_id AS src",
-            f"explode(array({h(0)}, {h(1)}, {h(2)})) AS dst",
-        )
-        .where("dst <> src")
-        .distinct()
-    )
+    edges = _md5_links(docs, n, "ht", drop_dangling=False).distinct()
     ids = docs.select(F.col("doc_id").alias("id"))
     hub = ids.select("id", F.lit(_HITS_SCALE).cast("long").alias("h"))
     auth = None
@@ -8700,10 +8660,7 @@ ML_QUERIES["pareto_frontier"] = (pareto_frontier, _pareto_sql())
 #     dist = 0), so converged rows never change;
 #   - the join is LEFT so a pointer to a node absent from the corpus
 #     (hostile fuzz corpora) is absorbing too, never row-dropping;
-#   - convergence = sum(dist) unchanged (one 1-row agg per round — the
-#     k-means/k_core driver-scalar audit class); localCheckpoint per
-#     round cuts the doubling lineage; round cap 12 (= depth 4096)
-#     raises loudly past it.
+#   - fixpoint() runs the rounds; round cap 12 (= depth 4096).
 # Parent synthesis: id % 7 == 0 (and id <= 0) are roots; otherwise
 # parent = md5 % id, STRICTLY smaller — acyclic by construction (a
 # random recursive forest, max depth ~ e*ln n, far under 4096).
@@ -8733,34 +8690,23 @@ def thread_roots(spark, sf_dir):
         .otherwise(F.lit(1))
         .cast("long")
         .alias("dist"),
-    ).localCheckpoint()
-    total = cur.agg(F.sum("dist")).collect()[0][0] or 0
-    for _ in range(_THREAD_MAX_ROUNDS):
+    )
+
+    def double(cur):
         nxt = cur.select(
             F.col("id").alias("jid"),
             F.col("ptr").alias("jptr"),
             F.col("dist").alias("jdist"),
         )
-        cur = (
-            cur.join(nxt, cur["ptr"] == nxt["jid"], "left")
-            .select(
-                "id",
-                F.coalesce("jptr", "ptr").alias("ptr"),
-                (
-                    F.col("dist") + F.coalesce("jdist", F.lit(0))
-                ).alias("dist"),
-            )
-            .localCheckpoint()
+        return cur.join(nxt, cur["ptr"] == nxt["jid"], "left").select(
+            "id",
+            F.coalesce("jptr", "ptr").alias("ptr"),
+            (F.col("dist") + F.coalesce("jdist", F.lit(0))).alias("dist"),
         )
-        new_total = cur.agg(F.sum("dist")).collect()[0][0] or 0
-        if new_total == total:
-            break
-        total = new_total
-    else:
-        raise RuntimeError(
-            f"thread_roots: no fixpoint within {_THREAD_MAX_ROUNDS} "
-            "doubling rounds (depth > 4096?)"
-        )
+
+    # keyed by id (doc_id is the documents key, and the LEFT join on the
+    # key keeps one row per id)
+    cur = fixpoint(cur, double, "thread_roots", _THREAD_MAX_ROUNDS)
     return (
         cur.select(
             F.col("id").alias("doc_id"),
@@ -9264,15 +9210,16 @@ ML_QUERIES["isotonic_calibrate"] = (isotonic_calibrate, _isotonic_sql())
 # Scale shape — level-synchronous frontier expansion:
 #   - each round is ONE equi-join (edges x frontier) + distinct +
 #     LEFT ANTI against the settled level table: the join touches only
-#     edges incident to the CURRENT frontier, and the frontier shrinks
-#     once the wave passes — the standard BSP BFS;
-#   - the per-round driver scalar is the frontier count (k-core audit
-#     class); localCheckpoint cuts the lineage each round;
+#     edges incident to the CURRENT frontier (the rows at the round's
+#     previous level), and the frontier shrinks once the wave passes —
+#     the standard BSP BFS;
+#   - the level table is the fixpoint() state: a round that adds no node
+#     leaves it unchanged, which ends the loop; the level comes from the
+#     step's own round counter, so no round collects a scalar;
 #   - unreached nodes are reported with lvl = -1 (re-anchored on the
 #     documents frame, so md5 ghost destinations never surface);
-#   - round cap 32 raises loudly — the engine computes TRUE levels or
-#     fails, never silently truncates; the oracle's depth bound (32)
-#     only has to cover what the engine proves reachable.
+#   - round cap 32 — the oracle's depth bound (32) only has to cover
+#     what the engine proves reachable.
 # Oracle: recursive-CTE shortest path with UNION dedup (cycle-safe),
 # min(lvl) per node — a different algorithm (path enumeration vs
 # frontier waves).
@@ -9292,26 +9239,24 @@ def bfs_levels(spark, sf_dir):
         F.col("doc_id").alias("id")
     )
     levels = seeds.select("id", F.lit(0).cast("long").alias("lvl"))
-    frontier = seeds
-    for k in range(1, _BFS_MAX_ROUNDS + 1):
+    rounds = itertools.count(1)
+
+    def expand(levels):
+        k = next(rounds)
+        frontier = levels.where(F.col("lvl") == k - 1).select(
+            F.col("id").alias("a")
+        )
         nxt = (
-            sym.join(frontier.withColumnRenamed("id", "a"), "a")
+            sym.join(frontier, "a")
             .select(F.col("b").alias("id"))
             .distinct()
             .join(levels, "id", "left_anti")
-            .localCheckpoint()
         )
-        if nxt.count() == 0:
-            break
-        levels = levels.unionAll(
-            nxt.select("id", F.lit(k).cast("long").alias("lvl"))
-        ).localCheckpoint()
-        frontier = nxt
-    else:
-        raise RuntimeError(
-            f"bfs_levels: frontier still live after {_BFS_MAX_ROUNDS} "
-            "rounds (graph deeper than the documented cap)"
-        )
+        return levels.unionAll(nxt.select("id", F.lit(k).cast("long").alias("lvl")))
+
+    # keyed by id: the seeds are distinct doc_ids, and each round adds
+    # distinct ids that are not in the table yet
+    levels = fixpoint(levels, expand, "bfs_levels", _BFS_MAX_ROUNDS)
     return (
         docs.join(levels, docs["doc_id"] == levels["id"], "left")
         .select(
@@ -10470,9 +10415,11 @@ ML_QUERIES["kmv_set_similarity"] = (kmv_set_similarity, _kmv_sql())
 # is a minimum, hence strictly below the re-attached node), preserve
 # connectivity, and strictly shrink a potential function; the fixpoint is
 # a forest of stars whose centers are component minima, so the label read
-# -off is one projection. The engine iterates to the TRUE fixpoint (the
-# round's output equals its input, the paper's termination test) and
-# raises past _LSS_MAX_ROUNDS — never silently under-converged.
+# -off is one projection. fixpoint() runs the double-rounds to the TRUE
+# fixpoint (the round's output equals its input, the paper's termination
+# test), capped at _LSS_MAX_ROUNDS; every edge set is distinct (the
+# initial one from _link_edges_undirected, each round's from its closing
+# distinct).
 #
 # Job shape per double-round. On a small graph the cost of the loop is
 # Spark's per-job scheduling, not data (AQE runs every shuffle map stage
@@ -10489,19 +10436,6 @@ ML_QUERIES["kmv_set_similarity"] = (kmv_set_similarity, _kmv_sql())
 #   3. the distinct of the round's (hi, lo) output.
 # Every exchange is hash-partitioned on node ids; nothing is keyed on a
 # corpus-sized composite and there is no all-pairs anywhere.
-# localCheckpoint truncates the per-round lineage exactly like k_core's
-# peel loop (at cluster scale: checkpoint to the job's HDFS dir instead).
-#
-# Termination test: fingerprint first, one exact check at the end. Every
-# edge set (the initial one included) is .observe()d with count(*) and
-# bit_xor(xxhash64(hi, lo)); the values ride the round's localCheckpoint
-# job, so comparing a round with the previous one costs no job. (Not
-# sum(xxhash64): ANSI mode raises ARITHMETIC_OVERFLOW on it, and sum(lo)
-# would overflow at web scale; xor cannot.) Different fingerprints prove
-# the sets differ. Equal ones are confirmed exactly by _lss_same_edges
-# (both sets distinct: equal counts and count(new left_semi old) ==
-# count(new)); a collision the exact check rejects just runs another
-# round. Barring a collision, a run pays one exact check, at its end.
 #
 # Trade-off of the windows: a window buffers a partition key's whole row
 # set in one task, so a hub node's whole neighbour list sits in one task
@@ -10529,40 +10463,14 @@ _LSS_MAX_ROUNDS = 16
 _LSS_ORACLE_ROUNDS = 16
 
 
-def _lss_checkpoint(edges):
-    """Materialize an (hi, lo) edge set; returns (frame, fingerprint),
-    the fingerprint {"n": count, "h": bit_xor(xxhash64(hi, lo))} taken
-    by the checkpoint job itself."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    edges = edges.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("hi", "lo")).alias("h"),
-    ).localCheckpoint()
-    return edges, obs.get
-
-
-def _lss_same_edges(new, old, n: int) -> bool:
-    """Exact test that edge set ``new`` equals ``old`` when both hold
-    ``n`` rows and ``new`` is distinct: new ⊆ old then leaves no room
-    for an old edge outside new."""
-    return new.join(old, ["hi", "lo"], "left_semi").count() == n
-
-
 def graph_components_lss(spark, sf_dir):
     """(node_id, comp, comp_size) for every document; comp = min doc_id
     of the node's connected component in the undirected link graph."""
     docs = t(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node_id")
     )
-    e, fp = _lss_checkpoint(
-        _link_edges_undirected(spark, sf_dir).select(
-            F.col("v").alias("hi"), F.col("u").alias("lo")
-        )
-    )
-    for _ in range(_LSS_MAX_ROUNDS):
+
+    def contract(e):
         # symmetrized neighborhoods: (a, b) = node a sees neighbor b
         nb = e.select(F.col("hi").alias("a"), F.col("lo").alias("b")).unionAll(
             e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
@@ -10578,22 +10486,22 @@ def graph_components_lss(spark, sf_dir):
         )
         # small-star over the (hi > lo)-oriented output: each hi-group's
         # lower neighborhood (plus hi itself) re-attaches to its minimum
-        ss, ss_fp = _lss_checkpoint(
+        return (
             ls.select("hi", "lo", F.min("lo").over(W.partitionBy("hi")).alias("m"))
             .select("m", F.explode(F.array("lo", "hi")).alias("x"))
             .where(F.col("x") != F.col("m"))
             .select(F.col("x").alias("hi"), F.col("m").alias("lo"))
             .distinct()
         )
-        done = ss_fp == fp and _lss_same_edges(ss, e, ss_fp["n"])
-        e, fp = ss, ss_fp
-        if done:
-            break
-    else:
-        raise RuntimeError(
-            f"graph_components_lss: no fixpoint within {_LSS_MAX_ROUNDS} "
-            "double-rounds"
-        )
+
+    e = fixpoint(
+        _link_edges_undirected(spark, sf_dir).select(
+            F.col("v").alias("hi"), F.col("u").alias("lo")
+        ),
+        contract,
+        "graph_components_lss",
+        _LSS_MAX_ROUNDS,
+    )
     labels = e.select(F.col("hi").alias("node_id"), F.col("lo").alias("comp"))
     lab = docs.join(labels, "node_id", "left").select(
         "node_id",
@@ -10690,22 +10598,7 @@ def random_walks(spark, sf_dir, walk_len: int = _RW_LEN):
     walks that hit a dangling node simply stop emitting rows."""
     docs = t(spark, sf_dir, "documents").select("doc_id")
     n = docs.count()
-
-    def h(j: int) -> str:
-        return (
-            f"(CAST(conv(substring(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % {n})"
-        )
-
-    directed = (
-        docs.where(F.expr(f"doc_id % {_PR_DANGLE_MOD} <> 3"))
-        .selectExpr(
-            "doc_id AS src",
-            f"explode(array({h(0)}, {h(1)}, {h(2)})) AS dst",
-        )
-        .where("dst <> src")
-        .distinct()
-    )
+    directed = _md5_links(docs, n, "pr", drop_dangling=True).distinct()
     wsp = W.partitionBy("src")
     ranked = directed.select(
         "src",
@@ -12752,12 +12645,10 @@ ML_QUERIES["code_switch_stats"] = (code_switch_stats, _code_switch_sql())
 # Per round: ONE oriented wedge self-join enumerates each triangle
 # exactly once (u<v orientation; a<b<c by construction), each
 # triangle votes support into its three edges (unionAll + groupBy —
-# map-side combinable), and edges below k-2 are dropped. Fixpoint by
-# edge-count equality (monotone decreasing, so count equality IS set
-# equality); localCheckpoint per round (the LSS/k_core lineage rule).
-# The oracle unrolls _KTRUSS_ROUNDS rounds MATERIALIZED — peeling is
+# map-side combinable), and edges below k-2 are dropped; fixpoint() runs
+# the rounds. The oracle unrolls _KTRUSS_ROUNDS rounds MATERIALIZED — peeling is
 # monotone, so rounds past the fixpoint are identity (the k_core
-# over-unroll argument); the engine raises loudly if the cap is hit.
+# over-unroll argument).
 #
 # Scale shape: the round cost is triangle enumeration — at 10^12
 # edges use the degree-oriented wedge build (triangle_count's
@@ -12788,23 +12679,13 @@ def _truss_support(edges):
 def k_truss(spark, sf_dir, k: int = KTRUSS_K):
     """(u, v, support) for every edge of the k-truss fixpoint of the
     undirected link graph, ordered by (u, v)."""
-    edges = _link_edges_undirected(spark, sf_dir).localCheckpoint()
-    n_edges = edges.count()
-    for _ in range(_KTRUSS_ROUNDS):
-        edges = (
-            _truss_support(edges)
-            .where(F.col("s") >= k - 2)
-            .select("u", "v")
-            .localCheckpoint()
-        )
-        n_new = edges.count()
-        if n_new == n_edges:
-            break
-        n_edges = n_new
-    else:
-        raise RuntimeError(
-            f"k_truss: no fixpoint within {_KTRUSS_ROUNDS} rounds"
-        )
+    def peel(edges):
+        return _truss_support(edges).where(F.col("s") >= k - 2).select("u", "v")
+
+    # the edge list is distinct, and each round's groupBy(u, v) keeps it so
+    edges = fixpoint(
+        _link_edges_undirected(spark, sf_dir), peel, "k_truss", _KTRUSS_ROUNDS
+    )
     return (
         _truss_support(edges)
         .select("u", "v", F.col("s").alias("support"))
@@ -13873,8 +13754,7 @@ ML_QUERIES["bootstrap_ci"] = (bootstrap_ci, _BOOT_SQL)
 # to cells; ALL subsequent work is on the CELL table (|cells| <<
 # |points|). Adjacency is an equi-join on exploded 3x3 neighbor keys
 # (never an all-pairs abs join); min-label propagation runs on cells
-# with localCheckpoint per round and a strictly-decreasing label-sum
-# fixpoint (raises on non-convergence, the dedup_clusters contract).
+# through fixpoint().
 # Point-role assignment is two equi-joins keyed on the cell.
 # --------------------------------------------------------------------------
 
@@ -13920,27 +13800,24 @@ def dbscan_grid(spark, sf_dir):
     ).select("src", "c.cx", "c.cy")
     edges = nbr.join(core.select("cx", "cy", F.col("key").alias("dst")),
                      ["cx", "cy"]).select("src", "dst").localCheckpoint()
-    labels = core.select(F.col("key").alias("cell"),
-                         F.col("key").alias("label")).localCheckpoint()
-    prev_sum = None
-    for _ in range(_DB_MAX_ROUNDS):
-        prop = (
+
+    def propagate(labels):
+        return (
             edges.join(
                 labels.select(F.col("cell").alias("dst"), "label"), "dst"
             )
             .groupBy(F.col("src").alias("cell"))
             .agg(F.min("label").alias("label"))
         )
-        labels = prop.localCheckpoint()
-        cur = labels.agg(F.sum("label")).collect()[0][0]  # model scalar
-        if cur == prev_sum:
-            break
-        prev_sum = cur
-    else:
-        raise RuntimeError(
-            f"dbscan_grid: min-label propagation did not converge in "
-            f"{_DB_MAX_ROUNDS} rounds"
-        )
+
+    # keyed by cell: one row per core cell's key, and each round groups
+    # by cell
+    labels = fixpoint(
+        core.select(F.col("key").alias("cell"), F.col("key").alias("label")),
+        propagate,
+        "dbscan_grid",
+        _DB_MAX_ROUNDS,
+    )
     comp = labels.select("cell", F.col("label").alias("cluster"))
     core_lab = core.join(comp, core.key == comp.cell).select(
         "cx", "cy", "cluster"

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window as W
 
+from .functions import md5_long
+
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -1953,13 +1955,6 @@ SCD_VERSIONS = 4
 SCD_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "MACHINERY", "HOUSEHOLD"]
 
 
-def _md5_long60(c):
-    """First 60 md5 bits as non-negative int64 — the module-shared hash
-    idiom (same as ml_ops.md5_long; duplicated one-liner because ml_ops
-    imports queries)."""
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
 def q_scd2_history(spark, sf_dir):
     cust = t(spark, sf_dir, "customer").select("c_custkey")
     log = cust.select(
@@ -1969,14 +1964,14 @@ def q_scd2_history(spark, sf_dir):
         "c_custkey",
         "j",
         (
-            _md5_long60(F.concat_ws(":", F.lit("scd:day"), "c_custkey", "j")) % 1000
+            md5_long(F.concat_ws(":", F.lit("scd:day"), "c_custkey", "j")) % 1000
         )
         .cast("int")
         .alias("eff_day"),
         F.element_at(
             F.array(*[F.lit(s) for s in SCD_SEGMENTS]),
             (
-                _md5_long60(F.concat_ws(":", F.lit("scd:seg"), "c_custkey", "j"))
+                md5_long(F.concat_ws(":", F.lit("scd:seg"), "c_custkey", "j"))
                 % len(SCD_SEGMENTS)
                 + 1
             ).cast("int"),
@@ -2151,7 +2146,7 @@ def q_cdc_apply(spark, sf_dir):
         "seq",
         F.when(F.col("seq") == 0, F.lit("I"))
         .when(
-            _md5_long60(F.concat_ws(":", F.lit("cdc:op"), "c_custkey", "seq")) % 10
+            md5_long(F.concat_ws(":", F.lit("cdc:op"), "c_custkey", "seq")) % 10
             == 9,
             F.lit("D"),
         )
@@ -2160,7 +2155,7 @@ def q_cdc_apply(spark, sf_dir):
         F.element_at(
             F.array(*[F.lit(s) for s in SCD_SEGMENTS]),
             (
-                _md5_long60(F.concat_ws(":", F.lit("cdc:val"), "c_custkey", "seq"))
+                md5_long(F.concat_ws(":", F.lit("cdc:val"), "c_custkey", "seq"))
                 % len(SCD_SEGMENTS)
                 + 1
             ).cast("int"),

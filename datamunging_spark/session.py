@@ -44,10 +44,12 @@ one. A caller whose sessions are short can pass it in
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import io
 import os
 import re
+import shutil
 import tempfile
 import zipfile
 from collections.abc import Mapping
@@ -264,9 +266,24 @@ def _ship_package(spark: SparkSession) -> None:
         # the package to driver and executors; nothing to re-zip
         setattr(spark, key, True)
         return
-    zpath = _package_zip(pkg_dir, Path(tempfile.gettempdir()))
+    zpath = _package_zip(pkg_dir, _ship_dir())
     spark.sparkContext.addPyFile(str(zpath))
     setattr(spark, key, True)
+
+
+_SHIP_DIR: Path | None = None
+
+
+def _ship_dir() -> Path:
+    """This process's directory for package zips, made on first use and
+    removed at interpreter exit, so zips do not pile up in ``$TMPDIR``.
+    Spark serves an ``addPyFile``'d file from its path for the life of the
+    session, which ends with the process."""
+    global _SHIP_DIR
+    if _SHIP_DIR is None:
+        _SHIP_DIR = Path(tempfile.mkdtemp(prefix="datamunging_spark_ship-"))
+        atexit.register(shutil.rmtree, _SHIP_DIR, ignore_errors=True)
+    return _SHIP_DIR
 
 
 def _package_zip(pkg_dir: Path, out_dir: Path) -> Path:

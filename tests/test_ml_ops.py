@@ -3294,7 +3294,12 @@ def test_graph_components_lss_raises_without_fixpoint(spark, monkeypatch):
     cap of one round must raise, not return an under-converged labeling."""
     from datamunging_spark import ml_ops
 
-    monkeypatch.setattr(ml_ops, "_LSS_MAX_ROUNDS", 1)
+    real = ml_ops.fixpoint
+    monkeypatch.setattr(
+        ml_ops,
+        "fixpoint",
+        lambda state, step, name, max_rounds: real(state, step, name, 1),
+    )
     with pytest.raises(RuntimeError, match="no fixpoint within 1"):
         ml_ops.graph_components_lss(spark, SF_DIR)
 
@@ -3313,11 +3318,11 @@ def test_lss_exact_check_rejects_a_fingerprint_collision(
         return spark.createDataFrame(rows, cols)
 
     old = edges([(2, 1), (3, 1), (4, 3)])
-    assert ml_ops._lss_same_edges(edges([(4, 3), (2, 1), (3, 1)]), old, 3)
-    assert not ml_ops._lss_same_edges(edges([(2, 1), (3, 1), (4, 1)]), old, 3)
-    assert not ml_ops._lss_same_edges(edges([(2, 1), (3, 2), (4, 3)]), old, 3)
+    assert ml_ops._same_rows(edges([(4, 3), (2, 1), (3, 1)]), old, 3)
+    assert not ml_ops._same_rows(edges([(2, 1), (3, 1), (4, 1)]), old, 3)
+    assert not ml_ops._same_rows(edges([(2, 1), (3, 2), (4, 3)]), old, 3)
 
-    real = ml_ops._lss_checkpoint
+    real = ml_ops._checkpoint_fingerprinted
 
     def colliding(df):
         out, fp = real(df)
@@ -3334,11 +3339,26 @@ def test_lss_exact_check_rejects_a_fingerprint_collision(
             [(i, i + 1) for i in range(n - 1)], "u bigint, v bigint"
         ),
     )
-    monkeypatch.setattr(ml_ops, "_lss_checkpoint", colliding)
+    monkeypatch.setattr(ml_ops, "_checkpoint_fingerprinted", colliding)
     got = ml_ops.graph_components_lss(spark, str(tmp_path)).toPandas()
     assert {tuple(r) for r in got.itertuples(index=False)} == {
         (i, 0, n) for i in range(n)
     }
+
+
+def _query_jobs(spark, query) -> int:
+    """Spark jobs one run of catalog query ``query`` over SF_DIR takes."""
+    from datamunging_spark import ml_ops
+
+    sc = spark.sparkContext
+    group = f"test-{query}-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        getattr(ml_ops, query)(spark, SF_DIR).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_graph_components_lss_job_count(spark):
@@ -3347,18 +3367,79 @@ def test_graph_components_lss_job_count(spark):
     jobs per round. On this fixture (local[8], 8 shuffle partitions) the
     groupBy/join rounds with an exceptAll test per round ran 68 jobs;
     the window rounds with the observed fingerprint run 34."""
-    from datamunging_spark.ml_ops import graph_components_lss
-
-    sc = spark.sparkContext
-    group = "test-graph-components-lss-jobs"
-    sc.setJobGroup(group, group)
-    try:
-        graph_components_lss(spark, SF_DIR).toPandas()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = _query_jobs(spark, "graph_components_lss")
     assert 0 < jobs <= 40, jobs
+
+
+# Job counts of the other queries that run through ml_ops.fixpoint, on
+# this fixture (local[8], 8 shuffle partitions, sf0.001). "Before" is the
+# hand-written loop with its per-round count or sum probe job; "after"
+# is fixpoint(), whose fingerprint rides each round's checkpoint job and
+# whose one exact check runs at the end. dedup_clusters' loop already
+# folded its probe into a lazy checkpoint, so fixpoint()'s exact check
+# costs it two jobs. The first value is a cold call, the second a warm
+# one (dedup_clusters memoizes its LSH probe on the session).
+@pytest.mark.parametrize(
+    "query, bound",
+    [
+        ("k_core", 34),  # before 41, after 30
+        ("thread_roots", 31),  # before 35, after 28
+        ("k_truss", 30),  # before 31, after 30
+        ("dbscan_grid", 48),  # before 50, after 47
+        ("bfs_levels", 39),  # before 41, after 37
+        ("dedup_clusters", 39),  # before 36/34, after 38/36
+    ],
+)
+def test_fixpoint_query_job_count(spark, query, bound):
+    jobs = _query_jobs(spark, query)
+    assert 0 < jobs <= bound, jobs
+
+
+def test_fixpoint_raises_past_max_rounds_naming_the_query(spark):
+    """A step that never repeats its input exhausts the round cap."""
+    from datamunging_spark.ml_ops import fixpoint
+
+    state = spark.range(3)
+    with pytest.raises(
+        RuntimeError, match="counter did not converge: no fixpoint within 3 rounds"
+    ):
+        fixpoint(state, lambda df: df.select((F.col("id") + 1).alias("id")), "counter", 3)
+
+
+def test_fixpoint_exact_check_survives_a_fingerprint_collision(spark, monkeypatch):
+    """Every round keeps the row count and its fingerprint is forced to
+    collide, so only the exact check tells the rounds apart: fixpoint()
+    must still run to the true fixpoint (every v at 5), confirming it
+    once, and spend no more rounds than without the collision."""
+    from datamunging_spark import ml_ops
+
+    state = spark.createDataFrame([(k, 0) for k in range(4)], "k bigint, v bigint")
+    calls, checks = [], []
+
+    def step(df):
+        calls.append(1)
+        return df.select("k", F.least(F.col("v") + 1, F.lit(5)).alias("v"))
+
+    honest = ml_ops.fixpoint(state, step, "climb", 8)
+    assert len(calls) == 6  # five rounds of change, one that confirms
+
+    real_checkpoint, real_same = ml_ops._checkpoint_fingerprinted, ml_ops._same_rows
+
+    def colliding(df):
+        out, fp = real_checkpoint(df)
+        return out, {"n": fp["n"], "h": 0}
+
+    def same_rows(new, old, n):
+        checks.append(real_same(new, old, n))
+        return checks[-1]
+
+    monkeypatch.setattr(ml_ops, "_checkpoint_fingerprinted", colliding)
+    monkeypatch.setattr(ml_ops, "_same_rows", same_rows)
+    calls.clear()
+    got = ml_ops.fixpoint(state, step, "climb", 8)
+    assert sorted(map(tuple, got.collect())) == [(k, 5) for k in range(4)]
+    assert sorted(map(tuple, honest.collect())) == [(k, 5) for k in range(4)]
+    assert len(calls) == 6 and checks == [False] * 5 + [True]
 
 
 # ---------------------------------------------------------------------------

@@ -127,6 +127,38 @@ def test_narrow_local_session_jvm_runs_serial_gc(tmp_path):
     assert SERIAL in args, args
 
 
+_SHIP_CHILD = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from datamunging_spark import session
+spark = session.get_spark(app_name="ship-dir-check", master="local[2]")
+print(json.dumps([str(p) for p in session._ship_dir().iterdir()]))
+spark.stop()
+"""
+
+
+def test_session_leaves_no_package_zip_behind(tmp_path):
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    env = {k: v for k, v in os.environ.items() if k not in session._JVM_OPTION_ENV}
+    env.update(SPARK_GRAFT_DRIVER_MEM="512m", TMPDIR=str(tmpdir))
+    proc = subprocess.run(
+        [sys.executable, "-c", _SHIP_CHILD, str(REPO)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    shipped = [Path(p) for p in json.loads(proc.stdout.strip().splitlines()[-1])]
+    # while the session ran, its zip sat in a directory of its own under TMPDIR
+    assert len(shipped) == 1 and shipped[0].name.startswith("datamunging_spark_pyfiles-")
+    assert shipped[0].parent.parent == tmpdir
+    assert not shipped[0].parent.exists()
+    assert list(tmpdir.rglob("datamunging_spark_pyfiles-*")) == []
+
+
 def _cgroup_files(tmp_path, proc_lines, files):
     root = tmp_path / "cgroup"
     for rel, text in files.items():
