@@ -1,7 +1,7 @@
 # Entry points for the datamunging_spark engine.
 PY ?= python
 
-.PHONY: test correctness fuzz fuzz-streaming bench perfbench scaling scaling-gated
+.PHONY: test correctness fuzz fuzz-streaming bench perfbench scaling scaling-under scaling-extract
 
 # Differential fuzzing: engine vs DuckDB oracle on randomized HOSTILE
 # corpora (empty texts, zero vectors, duplicates, unicode) — catches
@@ -36,19 +36,17 @@ perfbench:
 	$(PY) -m pytest perfbench/test_perfbench.py -q -p no:cacheprovider
 	$(PY) perfbench/run.py --workload ocr_pipeline --seed 1 --seconds 5 --trace 0
 
+# Scaling evidence (see scaling_bench.py): taskset-pinned N and 4N
+# widths, each attempt behind a busy-core gate and retried when foreign
+# load or steal contaminates it, plus a pure-ALU host-ceiling probe.
+# `scaling` takes N from the host (a quarter of its CPUs, so 4N fills
+# it); scaling-under runs 2->8, both widths below the capacity of a
+# large host, the closer emulation of discrete N->4N executors.
 scaling:
-	$(PY) scaling_bench.py
+	SCALING_N_DOCS=24000 $(PY) scaling_bench.py
 
-# Reproducible scaling evidence (round-3 protocol): pre-run busy gate,
-# in-run busy/steal contamination retry with per-attempt audit, and a
-# pure-ALU host-ceiling probe (see scaling_bench.py). The default pair
-# is 8->32; scaling-gated-under runs 2->8 — both widths below host
-# capacity, the honest emulation of discrete N->4N executors.
-scaling-gated:
-	SCALING_LOAD_GATE=2 SCALING_N_DOCS=24000 $(PY) scaling_bench.py
-
-scaling-gated-under:
-	SCALING_LOAD_GATE=2 SCALING_N_DOCS=24000 SCALING_N_CORES=2 $(PY) scaling_bench.py
+scaling-under:
+	SCALING_N_DOCS=24000 SCALING_N_CORES=2 $(PY) scaling_bench.py
 
 scaling-extract:
-	SCALING_LOAD_GATE=2 SCALING_JOB=extract SCALING_N_DOCS=160000 SCALING_N_CORES=2 $(PY) scaling_bench.py
+	SCALING_JOB=extract SCALING_N_DOCS=160000 SCALING_N_CORES=2 $(PY) scaling_bench.py

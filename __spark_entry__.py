@@ -30,13 +30,13 @@ from datamunging_spark.queries import RELATIONAL_QUERIES  # noqa: E402
 
 # The driver records correctness for the first 50 catalog entries, so the
 # window is curated explicitly: one representative per relational category
-# (SURVEY.md §2.2), then every flagship training-data op (dedup family,
-# clustering + curation, ANN, multimodal, text analytics, the cascade's
-# hash-checkable metrics run). Everything after the window stays in the
-# catalog and is exact-value-checked by pytest (test_queries_oracle.py,
-# test_ml_ops.py) — same oracles, same comparison.
+# (SURVEY.md §2.2), then the flagship training-data ops. The window is
+# frozen: its names and order equal CORRECTNESS_r05.json's keys
+# (tests/test_registry.py pins that), and git log keeps how each slot was
+# chosen. Everything after the window stays in the catalog and is
+# exact-value-checked by pytest (test_queries_oracle.py, test_ml_ops.py)
+# and CORRECTNESS_local.json — same oracles, same comparison.
 DRIVER_PRIORITY = [
-    # relational surface, one per category
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q5_region_revenue",
@@ -52,178 +52,39 @@ DRIVER_PRIORITY = [
     "stats_aggregates",
     "set_ops_segments",
     "string_funcs",
-    # (array_funcs moved past the window late in r5: hof_embeddings
-    # keeps the array/HOF family driver-exercised; array_funcs stays
-    # oracle-checked in pytest + CORRECTNESS_local.json. Freed slot
-    # goes to pagerank_links, the iterative-graph flagship.)
     "pagerank_links",
     "hof_embeddings",
-    # (pivot_status moved past the window late in r5: it is a reshape
-    # convenience; the relational surface keeps 19 other driver rows.
-    # Freed slot goes to boilerplate_relational — the DOM-heuristic
-    # boilerplate classifier, the north rule's named concern, giving
-    # the driver artifact a hash-checked row for the block-level
-    # extraction DECISION LOGIC itself. pivot_status stays
-    # oracle-checked in pytest + CORRECTNESS_local.json.)
     "boilerplate_relational",
     "sessionize_events",
     "scalar_subquery",
     "salted_heavy_hitters",
-    # training-data / extraction flagship ops
     "extract_munge_metrics",
     "dedup_exact",
     "dedup_minhash_lsh",
-    # (dedup_simhash moved past the window late in r5: the dedup family
-    # keeps exact/minhash_lsh/clusters/embedding_cosine in-window; the
-    # bit-vote op remains oracle-checked in pytest +
-    # CORRECTNESS_local.json. Freed slot goes to span_interval_merge —
-    # the gaps-and-islands span-union over the north rule's interleaved
-    # span model, single-hash-shuffle, plan-asserted.)
     "span_interval_merge",
     "dedup_clusters",
-    # (dedup_representatives moved past the window late in r5: the dedup
-    # family keeps exact/minhash_lsh/simhash/clusters/embedding_cosine
-    # in-window; representative selection remains oracle-checked in
-    # pytest + CORRECTNESS_local.json. Freed slot goes to zorder_layout.)
     "zorder_layout",
     "curate_corpus",
     "dedup_embedding_cosine",
     "ann_cosine_topk",
-    # (ann_lsh_buckets moved past the window in r4: LSH bucketing stays
-    # driver-exercised via dedup_minhash_lsh banding and
-    # dedup_embedding_cosine hyperplane buckets; the op itself remains
-    # oracle-checked in pytest + CORRECTNESS_local.json)
-    # (ann_ivf_topk's slot upgraded late in r5 to ann_ivf_sq8, its
-    # strict superset: the same IVF cell pruning plus the SQ8
-    # integer-ADC shortlist and exact float rerank — the composed
-    # 10^12-vector serving path. ann_ivf_topk stays oracle-checked in
-    # pytest + CORRECTNESS_local.json, and the rerank column holds the
-    # identical round(cos,4) contract.)
     "ann_ivf_sq8",
     "kmeans_embeddings",
-    # (knn_join_topk moved past the window late in r5: the ANN family
-    # keeps ann_cosine_topk + ann_ivf_sq8 + kmeans_embeddings in-window;
-    # the kNN join remains oracle-checked in pytest +
-    # CORRECTNESS_local.json. Freed slot goes to anchor_text_agg — the
-    # link-analysis family's second op: per-target anchor aggregation
-    # with a tie-deterministic modal pick.)
     "anchor_text_agg",
     "multimodal_resize",
     "lang_id_stopword",
-    # (text_quality moved past the window in the final r5 batch: the
-    # quality family keeps gopher_quality (the strictly richer composite)
-    # + quality_classifier-adjacent signals in-window; text_quality stays
-    # oracle-checked in pytest + CORRECTNESS_local.json. That slot
-    # briefly held thread_roots (pointer-doubling list ranking); in the
-    # resumed r5 batch it goes to graph_components_lss — the
-    # large-star/small-star star contraction, the SAME log-depth
-    # pointer-jumping class but verified by THREE independent
-    # algorithms (LSS engine, pointer-doubling DuckDB oracle,
-    # union-find pytest replica). thread_roots stays oracle-checked in
-    # pytest + CORRECTNESS_local.json.)
     "graph_components_lss",
-    # (token_stats moved past the window late in r5: the token family
-    # keeps bpe_learn in-window; the op remains oracle-checked in pytest
-    # + CORRECTNESS_local.json. That slot briefly held
-    # url_normalize_dedup; in the resumed r5 batch the slot goes to
-    # pq_adc_topk — product-quantization ADC search, the
-    # vector-COMPRESSION serving flagship (fused multi-subspace codebook
-    # learning + LUT-sum top-k + exact rerank), a capability class the
-    # ann_cosine/ivf_sq8 rows don't exercise (learned codebooks).
-    # url_normalize_dedup stays oracle-checked in pytest +
-    # CORRECTNESS_local.json; the dedup family keeps exact/minhash_lsh/
-    # clusters/embedding_cosine/curate in-window.)
     "pq_adc_topk",
-    # (token_stats_bpe + multimodal_frame_sample moved past the window in
-    # r5 to make room for the round-5 flagships below; the BPE family
-    # keeps bpe_learn in-window and multimodal keeps multimodal_resize —
-    # both remain oracle-checked in pytest + CORRECTNESS_local.json)
-    # (winnow_fingerprint moved past the window in the resumed-r5 batch:
-    # content fingerprinting stays driver-exercised via
-    # dedup_minhash_lsh's shingle signatures and substring_dedup's
-    # k-gram anchors; winnowing remains oracle-checked in pytest +
-    # CORRECTNESS_local.json. Freed slot goes to bootstrap_ci — the
-    # Poisson-bootstrap percentile CI, the first UNCERTAINTY-
-    # QUANTIFICATION row: every other aggregate reports a point
-    # estimate; this is the Chamandy-et-al. web-scale resample whose
-    # replicate weights are a stateless per-row projection.)
     "bootstrap_ci",
-    # (hash_split moved past the window late in r5: md5 split stays
-    # driver-exercised inside curate_corpus; the op remains
-    # oracle-checked in pytest + CORRECTNESS_local.json. That slot
-    # briefly held embedding_quantize; in the final r5 batch the SQ8
-    # capability is driver-covered by ann_ivf_sq8 (which composes the
-    # identical int8 quantization + integer ADC), so the slot goes to
-    # triangle_count — the degree-oriented wedge join, a graph-analytics
-    # capability (exact subgraph listing) that pagerank/anchor_text
-    # don't exercise. embedding_quantize stays oracle-checked in pytest
-    # + CORRECTNESS_local.json. In the final r5 batch triangle_count
-    # itself rotated past the window — see hll_distinct below.)
     "decontaminate_ngrams",
-    # (pack_shards moved past the window late in r5: the packing family
-    # keeps pack_shards_bfd in-window below. That slot briefly held
-    # gopher_repetition; in the final r5 batch the Gopher filter family
-    # is driver-covered by gopher_quality, so the slot goes to
-    # fuzzy_join_shingles — exact prefix-filter set-similarity JOIN
-    # (record linkage), a capability class no other in-window row has:
-    # cross-table fuzzy matching with zero false negatives, the
-    # deterministic complement of the MinHash-LSH row. gopher_repetition
-    # stays oracle-checked in pytest + CORRECTNESS_local.json.)
-    # (fuzzy_join_shingles moved past the window in the resumed-r5
-    # batch: its slot goes to record_linkage_fs — Fellegi-Sunter
-    # probabilistic linkage, the strictly richer cross-table matching
-    # representative: MULTIPLE field-agreement signals with
-    # u-probabilities ESTIMATED FROM THE DATA and an integer
-    # likelihood-ratio decision rule, vs the single set-similarity
-    # signal. fuzzy_join_shingles stays oracle-checked in pytest +
-    # CORRECTNESS_local.json and in the bench window.)
     "record_linkage_fs",
-    # (triangle_count moved past the window in the final r5 batch: the
-    # graph family keeps pagerank_links + anchor_text_agg + thread_roots
-    # in-window; exact wedge-join listing remains oracle-checked in
-    # pytest + CORRECTNESS_local.json. Freed slot goes to hll_distinct —
-    # the first MERGEABLE-SKETCH row: deterministic integer HyperLogLog
-    # whose register table partial-aggregates map-side, the class that
-    # replaces COUNT(DISTINCT) shuffles at 10^12 rows. Its sibling
-    # cms_heavy_hitters stays oracle-checked past the window.)
     "hll_distinct",
     "header_detect_relational",
-    # round-3 flagship additions (freed slots: the grouping-sets family
-    # keeps one driver representative, rollup_lineitem; the window
-    # family keeps window_topk_orders — cube/grouping_sets/event_gaps
-    # stay oracle-checked in pytest + CORRECTNESS_local.json)
-    # (lm_bigram_score's slot upgraded late in r5 to lm_kn_bigram, the
-    # strictly more demanding member of the LM-scoring family: held-out
-    # train/eval split, absolute discounting, and the Kneser-Ney
-    # continuation backoff that the self-scored add-one op never
-    # stresses. lm_bigram_score stays oracle-checked in pytest +
-    # CORRECTNESS_local.json.)
     "lm_kn_bigram",
     "redact_pii",
-    # (paragraph_dedup moved past the window in the final r5 batch: the
-    # dedup family keeps exact/minhash_lsh/clusters/embedding_cosine/
-    # substring — five in-window rows; paragraph-hash dedup stays
-    # oracle-checked in pytest + CORRECTNESS_local.json. Freed slot goes
-    # to label_propagation, the community-detection flagship — a
-    # capability class (graph DENSITY partition) no other in-window row
-    # has; components/PageRank answer reachability/centrality, not
-    # density.)
     "label_propagation",
-    # round-4 flagship additions (freed slots: date_funcs/json_extract —
-    # scalar-function families whose exact-value oracles keep running in
-    # pytest + CORRECTNESS_local.json; string_funcs/array_funcs/
-    # hof_embeddings keep the function families driver-exercised). The
-    # external driver has no per-name expectations — it records whatever
-    # the first 50 catalog entries are (verified against the r1-r3
-    # CORRECTNESS artifacts, whose keys simply follow this list).
     "substring_dedup",
     "gopher_quality",
     "bpe_learn",
-    # round-5 flagship additions: the Bloom-filter decontamination scale
-    # variant (fixed-size broadcast payload + bloom-pruned verify join)
-    # and best-fit-decreasing shard packing (quality variant of
-    # pack_shards; applyInPandas per md5 pack group, recursive-CTE
-    # oracle replaying the exact sequential placement)
     "decontaminate_bloom",
     "pack_shards_bfd",
 ]

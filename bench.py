@@ -1,14 +1,24 @@
 #!/usr/bin/env python
 """Benchmark driver: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS], plus the extraction pipeline's
-pages/sec. Prints ONE JSON line:
-
-    {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+sf0.1) on get_spark's default local master, plus the extraction pipeline's
+pages/sec.
 
 Each query is forced to full materialization with the ``noop`` sink (so
 column pruning can't skip computed outputs, and no driver collect cost
-pollutes the number). Scaling evidence across two parallelism levels
-lives in scaling_bench.py → BENCH/BASELINE.md.
+pollutes the number). ``REPEATS`` passes run round-robin over every
+query and the extraction pass, so load that lasts minutes lands on every
+query alike instead of on the one it happened to overlap; a query's wall
+is the min of its repeats. Each repeat runs in its own Spark job group,
+and the fastest repeat's stage metrics (perfbench/stagemetrics.py) go to
+one JSON line on stderr.
+
+Stdout's last line is ONE compact JSON object (``metric``, ``value`` in
+sec, per-query ``queries`` walls, ``sf``, extraction pages/sec) plus the
+load of the whole timed window: the host's busy and steal cores, foreign
+cores = host busy minus this process tree's own CPU per second
+(perfbench/proctree.py), and a ``contaminated`` flag. A long last line
+was cut off by a tail capture in r4, so detail goes to stderr.
+Scaling evidence across two parallelism levels lives in scaling_bench.py.
 """
 
 from __future__ import annotations
@@ -25,6 +35,8 @@ from datamunging_spark.ml_ops import ML_QUERIES  # noqa: E402
 from datamunging_spark.operators.munge import INPUT_SCHEMA, munge  # noqa: E402
 from datamunging_spark.queries import RELATIONAL_QUERIES  # noqa: E402
 from datamunging_spark.session import get_spark  # noqa: E402
+from perfbench import proctree  # noqa: E402
+from perfbench.stagemetrics import group_metrics, job_group  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -175,110 +187,86 @@ HEADLINE = [
 
 ALL = {**RELATIONAL_QUERIES, **ML_QUERIES}
 
-# In-run contamination protocol (r3 verdict item 1: BENCH_r03 was recorded
-# from a window with 6.3 foreign busy cores + 1.0 steal cores — over the
-# scaling harness's own discard gate — and showed phantom 1.2-1.8x
-# regressions on untouched plans). Same defense scaling_bench.py uses,
-# adapted to an unpinned whole-host run: the bench itself may legally use
-# every core, so mid-pass foreign busy is not separable from own busy;
-# what IS separable is (a) hypervisor steal across the timed pass and
-# (b) instantaneous host busy sampled BETWEEN queries, while this process
-# is idle. Each timed repeat therefore (1) waits for the idle-time busy
-# gate, (2) runs, (3) is discarded and retried if steal across its own
-# pass exceeded the slack. Every attempt is kept in the audit output.
-BENCH_LOAD_GATE = float(os.environ.get("BENCH_LOAD_GATE", "2.0"))
-BENCH_GATE_TIMEOUT = float(os.environ.get("BENCH_GATE_TIMEOUT", "180"))
-BENCH_STEAL_SLACK = float(os.environ.get("BENCH_STEAL_SLACK", "1.0"))
-# 3 repeats since r5 (was 2): min-of-repeats is documented as the
-# steady-state estimator, but Q1's decimal/intdiv codegen measurably
-# needs two passes to JIT (audited walls 3.36 -> 1.97 -> ~1.0 s); two
-# repeats reported warm-up, not steady state. Cross-round note: r<=4
-# artifacts are min-of-2 — expect a small systematic improvement from
-# the protocol alone on JIT-heavy queries.
-BENCH_REPEATS = int(os.environ.get("BENCH_REPEATS", "3"))
-BENCH_MAX_TRIES = int(os.environ.get("BENCH_MAX_TRIES", "6"))
+# Q1's decimal/intdiv codegen needs two passes to JIT (walls 3.36 ->
+# 1.97 -> ~1.0 s), so the third repeat is the first steady-state one.
+REPEATS = 3
+EXTRACTION_DOCS = 1500
+# The window is contaminated when other processes kept more than
+# FOREIGN_SLACK cores busy on average, or the hypervisor stole more than
+# STEAL_SLACK. Only a whole-window average sees sustained load: host
+# busy sampled between queries, while this process idles, read 0.0-0.4
+# cores in a window that carried 3 foreign cores throughout
+# (dedup_minhash_lsh read 4.98 s there against 1.71 s clean).
+FOREIGN_SLACK = 1.5
+STEAL_SLACK = 1.0
+# Spark caches compiled query code for 100 plans by default. Round-robin
+# runs ~115 queries between two repeats of one query, so every repeat
+# would recompile and run its new classes cold in the JVM (a median +21%
+# per query at sf0.1 against back-to-back repeats). With this cache each
+# query keeps its compiled code, as in a warm service.
+SPARK_CONF = {"spark.sql.codegen.cache.maxEntries": "4000"}
+STAGE_KEYS = ("executor_cpu_s", "shuffle_read_bytes", "shuffle_write_bytes",
+              "spill_bytes")
 
 
 def _force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def _cpu_sample():
-    v = list(map(int, open("/proc/stat").readline().split()[1:]))
-    return sum(v), v[3] + v[4], (v[7] if len(v) > 7 else 0)
+def _load_sample() -> tuple:
+    return (proctree._cpu_sample(), proctree.cpu_seconds(os.getpid()),
+            time.perf_counter())
 
 
-def _busy_cores(interval: float = 0.5) -> float:
-    t1, i1, _ = _cpu_sample()
-    time.sleep(interval)
-    t2, i2, _ = _cpu_sample()
-    dt = t2 - t1
-    return os.cpu_count() * (1.0 - (i2 - i1) / dt) if dt else 0.0
-
-
-def _wait_quiet() -> float:
-    busy = _busy_cores()
-    if not BENCH_LOAD_GATE:
-        return busy
-    t0 = time.time()
-    while busy > BENCH_LOAD_GATE and time.time() - t0 < BENCH_GATE_TIMEOUT:
-        time.sleep(3)
-        busy = _busy_cores()
-    return busy
-
-
-def _timed(run) -> dict:
-    """One gated, steal-audited measurement of ``run()``."""
-    gate_busy = _wait_quiet()
-    c0 = _cpu_sample()
-    t0 = time.perf_counter()
-    run()
-    wall = time.perf_counter() - t0
-    c1 = _cpu_sample()
-    dt = max(c1[0] - c0[0], 1)
-    steal = os.cpu_count() * (c1[2] - c0[2]) / dt
+def _window_load(start: tuple) -> dict:
+    """Host busy, steal and foreign cores averaged since ``start``."""
+    ((t0, i0, s0), own0, w0), ((t1, i1, s1), own1, w1) = start, _load_sample()
+    dt, n = max(t1 - t0, 1), os.cpu_count() or 1
+    busy, steal = n * (1.0 - (i1 - i0) / dt), n * (s1 - s0) / dt
+    foreign = max(busy - (own1 - own0) / max(w1 - w0, 1e-9), 0.0)
     return {
-        "wall_s": wall,
-        "gate_busy": round(gate_busy, 2),
-        "steal_during": round(steal, 2),
-        "contaminated": steal > BENCH_STEAL_SLACK,
+        "host_busy_cores_during": round(busy, 2),
+        "host_steal_cores_during": round(steal, 2),
+        "foreign_cores_during": round(foreign, 2),
+        "foreign_slack": FOREIGN_SLACK,
+        "steal_slack": STEAL_SLACK,
+        "contaminated": foreign > FOREIGN_SLACK or steal > STEAL_SLACK,
     }
 
 
-def _best_clean(run) -> tuple[float, dict]:
-    """Best-of-REPEATS clean walls; contaminated repeats retried up to
-    MAX_TRIES, all attempts kept for audit. If every attempt was
-    contaminated the best contaminated wall is reported with clean=0 —
-    honest fallback, flagged top-level (ADVICE r3 pattern)."""
-    attempts: list[dict] = []
-    clean: list[dict] = []
-    while len(clean) < BENCH_REPEATS and len(attempts) < BENCH_MAX_TRIES:
-        res = _timed(run)
-        attempts.append(res)
-        if not res["contaminated"]:
-            clean.append(res)
-    pool = clean or attempts
-    best = min(r["wall_s"] for r in pool)
-    audit = {
-        "n_clean": len(clean),
-        "n_attempts": len(attempts),
-        "attempts": [
-            {
-                "wall_s": round(a["wall_s"], 3),
-                "gate_busy": a["gate_busy"],
-                "steal_during": a["steal_during"],
-                "contaminated": a["contaminated"],
-            }
-            for a in attempts
-        ],
-    }
-    return best, audit
+def _timed(spark, group: str, run) -> tuple[float, dict]:
+    """Wall of ``run()`` under job group ``group``, and its stage metrics
+    (read at once: the status store keeps only the latest 1000 jobs)."""
+    with job_group(spark, group):
+        t0 = time.perf_counter()
+        run()
+        wall = time.perf_counter() - t0
+    g = group_metrics(spark, group)
+    return wall, {"jobs": len(g["jobs"]),
+                  **{k: round(g[k], 3) for k in STAGE_KEYS}}
+
+
+def _extraction_corpus(spark) -> tuple[str, int]:
+    """Deterministic synthetic corpus read from parquet — the production
+    input path (feeding the Python stage from driver-cached row objects
+    serializes on JVM row→Arrow conversion, see BENCH/BASELINE.md)."""
+    path = f"/tmp/bench_vols_{EXTRACTION_DOCS}"
+    if not os.path.exists(f"{path}/_SUCCESS"):
+        docs = generate_corpus(seed=42, n_docs=EXTRACTION_DOCS, monster_frac=0.05)
+        n_pages = sum(1 for _, spans in docs for s in spans if s.kind == "page")
+        vols = spark.createDataFrame(corpus_to_rows(docs), schema=INPUT_SCHEMA)
+        vols.repartition(
+            spark.sparkContext.defaultParallelism * 4, "doc_id"
+        ).write.mode("overwrite").parquet(path)
+        with open(f"{path}/_pages", "w") as f:
+            f.write(str(n_pages))
+    with open(f"{path}/_pages") as f:
+        return path, int(f.read())
 
 
 def main() -> None:
-    spark = get_spark(app_name="datamunging-bench")
+    spark = get_spark(app_name="datamunging-bench", extra_conf=SPARK_CONF)
     sf = float(SF_DIR.rstrip("/").split("sf")[-1])
-    c0 = _cpu_sample()
 
     # warm the JVM once and the Python UDF workers once (worker spawn is
     # ~200ms/core and would otherwise be billed to the first Python query)
@@ -294,93 +282,47 @@ def main() -> None:
     warm = generate_corpus(seed=1, n_docs=64, monster_frac=0.0)
     warm_df = spark.createDataFrame(corpus_to_rows(warm), schema=INPUT_SCHEMA)
     _force(munge(warm_df.repartition(spark.sparkContext.defaultParallelism), spark))
-
-    # best-of-N clean passes per query: a single cold pass conflates
-    # first-run codegen and neighbor-load spikes (this host varies ±2x,
-    # see BENCH/BASELINE.md) with steady-state cost; min of the
-    # contamination-gated repeats is the stable, still end-to-end number
-    timings: dict[str, float] = {}
-    audits: dict[str, dict] = {}
-    for name in HEADLINE:
-        fn = ALL[name][0]
-
-        def run(fn=fn, name=name):
-            # the BPE ops memoize the learned tokenizer on the session
-            # (production reuse pattern); the bench must still measure
-            # the real learn loop on every repeat
-            if name.startswith("bpe_"):
-                getattr(spark, "_datamunging_bpe_memo", {}).clear()
-            _force(fn(spark, SF_DIR))
-
-        best, audit = _best_clean(run)
-        timings[name] = round(best, 3)
-        audits[name] = audit
-
-    # extraction throughput: deterministic synthetic corpus read from
-    # parquet — the production input path (feeding the Python stage from
-    # driver-cached row objects serializes on JVM row→Arrow conversion,
-    # see BENCH/BASELINE.md)
-    n_docs = int(os.environ.get("BENCH_EXTRACTION_DOCS", "1500"))
-    corpus_path = f"/tmp/bench_vols_{n_docs}"
-    if not os.path.exists(f"{corpus_path}/_SUCCESS"):
-        docs = generate_corpus(seed=42, n_docs=n_docs, monster_frac=0.05)
-        n_pages = sum(1 for _, spans in docs for s in spans if s.kind == "page")
-        vols_w = spark.createDataFrame(corpus_to_rows(docs), schema=INPUT_SCHEMA)
-        vols_w.repartition(
-            spark.sparkContext.defaultParallelism * 4, "doc_id"
-        ).write.mode("overwrite").parquet(corpus_path)
-        with open(f"{corpus_path}/_pages", "w") as f:
-            f.write(str(n_pages))
-    n_pages = int(open(f"{corpus_path}/_pages").read())
+    corpus_path, n_pages = _extraction_corpus(spark)
     vols = spark.read.parquet(corpus_path)
-    munge_s, munge_audit = _best_clean(lambda: _force(munge(vols, spark)))
-    timings[f"extraction_munge_{n_docs}docs"] = round(munge_s, 3)
-    audits[f"extraction_munge_{n_docs}docs"] = munge_audit
 
-    total = round(sum(timings.values()), 3)
-    # whole-host accounting across the run: busy beyond what this bench
-    # used and nonzero steal mean the numbers are inflated by neighbor /
-    # hypervisor load (see BENCH/BASELINE.md) — carried in the output so
-    # any reader can judge the conditions the run saw
-    c1 = _cpu_sample()
-    dt = max(c1[0] - c0[0], 1)
-    ncpu = os.cpu_count()
-    dirty = sorted(n for n, a in audits.items() if a["n_clean"] == 0)
-    # Per-attempt audit detail goes to stderr + a sidecar file — NOT the
-    # final stdout line. r4 lesson (VERDICT r4 "What's wrong" #1): embedding
-    # query_audit in the single stdout JSON line overflowed the driver's
-    # tail capture and BENCH_r04.json came back "parsed": null. The driver
-    # parses the LAST stdout line; keep it compact.
-    audit_blob = json.dumps({"query_audit": audits})
-    print(audit_blob, file=sys.stderr)
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_audit_local.json"), "w"
-        ) as f:
-            f.write(audit_blob)
-    except OSError:
-        pass
+    def run_query(name):
+        # the BPE ops memoize the learned tokenizer on the session
+        # (production reuse pattern); the bench must still measure the
+        # real learn loop on every repeat
+        if name.startswith("bpe_"):
+            getattr(spark, "_datamunging_bpe_memo", {}).clear()
+        _force(ALL[name][0](spark, SF_DIR))
+
+    runs = {name: (lambda name=name: run_query(name)) for name in HEADLINE}
+    extraction = f"extraction_munge_{EXTRACTION_DOCS}docs"
+    runs[extraction] = lambda: _force(munge(vols, spark))
+
+    samples: dict[str, list[tuple[float, dict]]] = {name: [] for name in runs}
+    start = _load_sample()
+    for rep in range(REPEATS):
+        for name, run in runs.items():
+            samples[name].append(_timed(spark, f"{name}#{rep}", run))
+    load = _window_load(start)
+
+    timings, stages = {}, {}
+    for name, reps in samples.items():
+        wall, metrics = min(reps, key=lambda r: r[0])
+        timings[name] = round(wall, 3)
+        stages[name] = {"walls_s": [round(w, 3) for w, _ in reps], **metrics}
+    print(json.dumps({"query_stages": stages}), file=sys.stderr)
     print(
         json.dumps(
             {
                 "metric": "headline_queries_total_wall",
-                "value": total,
+                "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
                 "extraction_pages": n_pages,
-                "extraction_pages_per_sec": round(n_pages / munge_s, 1),
-                "host_busy_cores_during": round(
-                    ncpu * (1.0 - (c1[1] - c0[1]) / dt), 2
+                "extraction_pages_per_sec": round(
+                    n_pages / min(w for w, _ in samples[extraction]), 1
                 ),
-                "host_steal_cores_during": round(ncpu * (c1[2] - c0[2]) / dt, 2),
-                # a query in all_contaminated_queries never got a repeat
-                # with steal <= slack — its wall is an upper bound, not a
-                # measurement; per-attempt detail in BENCH_audit_local.json
-                "load_gate": BENCH_LOAD_GATE or None,
-                "steal_slack": BENCH_STEAL_SLACK,
-                "all_contaminated_queries": dirty,
+                **load,
             }
         )
     )

@@ -13589,8 +13589,9 @@ ML_QUERIES["record_linkage_fs"] = (record_linkage_fs, _RL_SQL)
 # 981012/996340/999406, capped at 6 — P(>6) < 6e-5), identical
 # literals in both engines; means are integer fixed-point
 # (centicents: sum_wx*100 DIV sum_w), so replicate means and the
-# rank-based percentile CI (ranks 2 and 63 of B=64, the ~95%
-# percentile bootstrap) are bit-identical under any partitioning.
+# rank-based percentile CI (ranks 2 and nrep-1 of the nrep surviving
+# replicates — 2 and 63 when all B=64 survive — the ~95% percentile
+# bootstrap) are bit-identical under any partitioning.
 # The per-replicate uniform is ONE md5 per ROW mixed per replicate b
 # by multiply-mod-prime (u_b = (h0*A_b + C_b) mod 2^31-1 with
 # A_b = 48271^(b+1), C_b = b*0x9E3779B9 mod P as frozen literals —
@@ -13615,6 +13616,12 @@ _BOOT_A = (48271, 182605794, 1291394886, 1914720637, 2078669041, 407355683, 1105
 _BOOT_C = (0, 506952122, 1013904244, 1520856366, 2027808488, 387276963, 894229085, 1401181207, 1908133329, 267601804, 774553926, 1281506048, 1788458170, 147926645, 654878767, 1161830889, 1668783011, 28251486, 535203608, 1042155730, 1549107852, 2056059974, 415528449, 922480571, 1429432693, 1936384815, 295853290, 802805412, 1309757534, 1816709656, 176178131, 683130253, 1190082375, 1697034497, 56502972, 563455094, 1070407216, 1577359338, 2084311460, 443779935, 950732057, 1457684179, 1964636301, 324104776, 831056898, 1338009020, 1844961142, 204429617, 711381739, 1218333861, 1725285983, 84754458, 591706580, 1098658702, 1605610824, 2112562946, 472031421, 978983543, 1485935665, 1992887787, 352356262, 859308384, 1366260506, 1873212628)
 
 
+_A_LIST = ", ".join(str(v) for v in _BOOT_A)
+_C_LIST = ", ".join(str(v) for v in _BOOT_C)
+# A CI needs ranks 2 and nrep-1 to be distinct, ordered replicates.
+_BOOT_MIN_REPS = 4
+
+
 def _poisson_weight_sql(u: str) -> str:
     """CASE expression mapping a ppm-uniform column to a Poisson(1)
     draw — same literal text works in Spark SQL and DuckDB."""
@@ -13622,6 +13629,92 @@ def _poisson_weight_sql(u: str) -> str:
         f"WHEN {u} < {c} THEN {k}" for k, c in enumerate(_POIS_CDF_PPM)
     )
     return f"CASE {branches} ELSE 6 END"
+
+
+# Replicates and their CI are built once for bootstrap_ci and
+# ab_test_uplift, each as a Spark helper and its DuckDB twin. A
+# replicate whose weights sum to 0 (over a group, or over one arm) has
+# no mean; the callers drop it IN BOTH ENGINES before ranking, and the
+# CI ranks against the surviving count. Keeping it would rank a NULL,
+# and Spark ASC puts NULLs first where DuckDB puts them last: a
+# one-row group loses ~23 of its 64 replicates (P(w=0) = e^-1).
+def _poisson_replicates(ev, salt: str, cols: list[str],
+                        n_boot: int = BOOT_B):
+    """``cols`` of ``ev`` once per replicate b in 0..n_boot-1, with the
+    row's Poisson(1) weight ``w`` for that replicate: one md5 of
+    ``salt || event_id`` per row, mixed per b by multiply-mod-prime."""
+    a_arr = ", ".join(str(v) for v in _BOOT_A[:n_boot])
+    c_arr = ", ".join(str(v) for v in _BOOT_C[:n_boot])
+    # h0 gets its own projection: beside the explode it would be
+    # evaluated above the Generate, one md5 per (row, replicate)
+    return ev.withColumn(
+        "h0",
+        md5_long(F.concat(F.lit(salt), F.col("event_id").cast("string")))
+        % _BOOT_P,
+    ).select(
+        *cols, "h0",
+        F.explode(F.array([F.lit(i) for i in range(n_boot)])).alias("b"),
+    ).withColumn(
+        "u",
+        F.expr(
+            f"((h0 * element_at(array({a_arr}), b + 1)"
+            f" + element_at(array({c_arr}), b + 1)) % {_BOOT_P})"
+            f" % 1000000"
+        ),
+    ).select(*cols, "b", F.expr(_poisson_weight_sql("u")).alias("w"))
+
+
+def _poisson_replicates_sql(src: str, salt: str, cols: str) -> str:
+    """DuckDB twin of :func:`_poisson_replicates` over relation ``src``
+    (B = BOOT_B replicates); ``cols`` is a SQL column list."""
+    return f"""
+  SELECT {cols}, b, {_poisson_weight_sql('u')} AS w
+  FROM (
+    SELECT {cols}, b,
+           ((h0 * ([{_A_LIST}])[b + 1]
+             + ([{_C_LIST}])[b + 1]) % {_BOOT_P}) % 1000000 AS u
+    FROM (
+      SELECT {cols},
+             CAST(concat('0x', substr(md5(concat('{salt}',
+                  CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT)
+               % {_BOOT_P} AS h0
+      FROM {src})
+    CROSS JOIN (SELECT unnest(range({BOOT_B})) AS b))"""
+
+
+def _boot_ci(reps, stat: str):
+    """Per event_type, the ~95% percentile CI (lo_fp, hi_fp) of
+    ``stat`` over its surviving replicates: ranks 2 and nrep-1 (2 and
+    63 when all 64 survive); no row unless _BOOT_MIN_REPS survive."""
+    wr = W.partitionBy("event_type").orderBy(F.asc(stat), F.asc("b"))
+    return (
+        reps.withColumn("r", F.row_number().over(wr))
+        .withColumn("nrep", F.count("*").over(W.partitionBy("event_type")))
+        .where(F.col("nrep") >= _BOOT_MIN_REPS)
+        .groupBy("event_type")
+        .agg(
+            F.max(F.when(F.col("r") == 2, F.col(stat))).alias("lo_fp"),
+            F.max(
+                F.when(F.col("r") == F.col("nrep") - 1, F.col(stat))
+            ).alias("hi_fp"),
+        )
+    )
+
+
+def _boot_ci_sql(src: str, stat: str) -> str:
+    """DuckDB twin of :func:`_boot_ci`."""
+    return f"""
+  SELECT event_type,
+         max(CASE WHEN r = 2 THEN {stat} END) AS lo_fp,
+         max(CASE WHEN r = nrep - 1 THEN {stat} END) AS hi_fp
+  FROM (
+    SELECT event_type, {stat},
+           row_number() OVER (PARTITION BY event_type
+                              ORDER BY {stat} ASC, b ASC) AS r,
+           count(*) OVER (PARTITION BY event_type) AS nrep
+    FROM {src})
+  WHERE nrep >= {_BOOT_MIN_REPS}
+  GROUP BY event_type"""
 
 
 def bootstrap_ci(spark, sf_dir, n_boot: int = BOOT_B):
@@ -13639,44 +13732,17 @@ def bootstrap_ci(spark, sf_dir, n_boot: int = BOOT_B):
         F.count("*").cast("long").alias("n"),
         F.expr("(sum(x) * 100) DIV count(*)").alias("mean_fp"),
     )
-    a_arr = ", ".join(str(v) for v in _BOOT_A[:n_boot])
-    c_arr = ", ".join(str(v) for v in _BOOT_C[:n_boot])
-    reps = ev.withColumn(
-        "h0",
-        md5_long(F.concat(F.lit("bs:"), F.col("event_id").cast("string")))
-        % _BOOT_P,
-    ).select(
-        "event_type", "x", "h0",
-        F.explode(F.array([F.lit(i) for i in range(n_boot)])).alias("b"),
-    ).withColumn(
-        "u",
-        F.expr(
-            f"((h0 * element_at(array({a_arr}), b + 1)"
-            f" + element_at(array({c_arr}), b + 1)) % {_BOOT_P})"
-            f" % 1000000"
-        ),
-    ).withColumn("w", F.expr(_poisson_weight_sql("u")))
-    means = reps.groupBy("event_type", "b").agg(
-        F.expr("(sum(w * x) * 100) DIV nullif(sum(w), 0)").alias("m_fp")
+    means = (
+        _poisson_replicates(ev, "bs:", ["event_type", "x"], n_boot)
+        .groupBy("event_type", "b")
+        .agg(F.expr("sum(w * x)").alias("swx"), F.sum("w").alias("sw"))
+        .where(F.col("sw") > 0)
+        .select("event_type", "b", F.expr("(swx * 100) DIV sw").alias("m_fp"))
     )
-    wr = W.partitionBy("event_type").orderBy(F.asc("m_fp"), F.asc("b"))
-    ci = (
-        means.withColumn("r", F.row_number().over(wr))
-        .groupBy("event_type")
-        .agg(
-            F.max(F.when(F.col("r") == 2, F.col("m_fp"))).alias("lo_fp"),
-            F.max(
-                F.when(F.col("r") == n_boot - 1, F.col("m_fp"))
-            ).alias("hi_fp"),
-        )
-    )
-    return point.join(ci, "event_type").select(
+    return point.join(_boot_ci(means, "m_fp"), "event_type").select(
         "event_type", "n", "mean_fp", "lo_fp", "hi_fp"
     )
 
-
-_A_LIST = ", ".join(str(v) for v in _BOOT_A)
-_C_LIST = ", ".join(str(v) for v in _BOOT_C)
 
 _BOOT_SQL = f"""
 WITH ev AS (
@@ -13690,38 +13756,16 @@ point AS (
          CAST((sum(x) * 100) // count(*) AS BIGINT) AS mean_fp
   FROM ev GROUP BY event_type
 ),
-hashed AS (
-  SELECT event_type, x,
-         CAST(concat('0x', substr(md5(concat('bs:',
-              CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT)
-           % {_BOOT_P} AS h0
-  FROM ev
-),
-reps AS (
-  SELECT event_type, x, b,
-         ((h0 * ([{_A_LIST}])[b + 1]
-           + ([{_C_LIST}])[b + 1]) % {_BOOT_P}) % 1000000 AS u
-  FROM hashed CROSS JOIN (SELECT unnest(range({BOOT_B})) AS b)
-),
-weighted AS (
-  SELECT event_type, b, x, {_poisson_weight_sql('u')} AS w FROM reps
+weighted AS ({_poisson_replicates_sql('ev', 'bs:', 'event_type, x')}
 ),
 means AS (
-  SELECT event_type, b,
-         CAST((sum(w * x) * 100) // nullif(sum(w), 0) AS BIGINT) AS m_fp
-  FROM weighted GROUP BY event_type, b
+  SELECT event_type, b, CAST((swx * 100) // sw AS BIGINT) AS m_fp
+  FROM (
+    SELECT event_type, b, sum(w * x) AS swx, sum(w) AS sw
+    FROM weighted GROUP BY event_type, b)
+  WHERE sw > 0
 ),
-ranked AS (
-  SELECT event_type, m_fp,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY m_fp ASC, b ASC) AS r
-  FROM means
-),
-ci AS (
-  SELECT event_type,
-         max(CASE WHEN r = 2 THEN m_fp END) AS lo_fp,
-         max(CASE WHEN r = {BOOT_B - 1} THEN m_fp END) AS hi_fp
-  FROM ranked GROUP BY event_type
+ci AS ({_boot_ci_sql('means', 'm_fp')}
 )
 SELECT event_type, n, mean_fp, lo_fp, hi_fp
 FROM point JOIN ci USING (event_type)
@@ -14243,10 +14287,10 @@ ML_QUERIES["text_tiling"] = (text_tiling, _TT_SQL)
 # classic deterministic user-id split (user_id % 2); swap in the real
 # assignment column in production, the plan is unchanged.
 #
-# Determinism: the replicate machinery is shared VERBATIM with
-# bootstrap_ci (_BOOT_A/_BOOT_C multiply-mod-prime mixing over one md5
-# per row, frozen Poisson(1) ppm thresholds); uplift_fp is integer
-# fixed-point (centicents), the ~95% CI is rank-based (2/63 of B=64),
+# Determinism: the replicates and the CI come from bootstrap_ci's
+# builders (_poisson_replicates, _boot_ci and their SQL twins);
+# uplift_fp is integer fixed-point (centicents), the ~95% CI is
+# rank-based (2 and nrep-1 of the surviving replicates),
 # and `significant` = CI excludes zero — all bit-identical under any
 # partitioning.
 #
@@ -14298,30 +14342,10 @@ def ab_test_uplift(spark, sf_dir, n_boot: int = BOOT_B):
             ).alias("uplift_fp"),
         )
     )
-    a_arr = ", ".join(str(v) for v in _BOOT_A[:n_boot])
-    c_arr = ", ".join(str(v) for v in _BOOT_C[:n_boot])
-    reps = ev.withColumn(
-        "h0",
-        md5_long(F.concat(F.lit("ab:"), F.col("event_id").cast("string")))
-        % _BOOT_P,
-    ).select(
-        "event_type", "arm", "x", "h0",
-        F.explode(F.array([F.lit(i) for i in range(n_boot)])).alias("b"),
-    ).withColumn(
-        "u",
-        F.expr(
-            f"((h0 * element_at(array({a_arr}), b + 1)"
-            f" + element_at(array({c_arr}), b + 1)) % {_BOOT_P})"
-            f" % 1000000"
-        ),
-    ).withColumn("w", F.expr(_poisson_weight_sql("u")))
-    # replicates where the Poisson weights zero out an entire arm are
-    # dropped IN BOTH ENGINES (no uplift is defined there; keeping
-    # them would also hit NULL-ordering divergence: Spark ASC is
-    # NULLS FIRST, DuckDB ASC is NULLS LAST). CI ranks are relative to
-    # the surviving replicate count.
+    # a replicate whose weights zero out an entire arm has no uplift
     uplifts = (
-        reps.groupBy("event_type", "b")
+        _poisson_replicates(ev, "ab:", ["event_type", "arm", "x"], n_boot)
+        .groupBy("event_type", "b")
         .agg(
             F.expr("sum(CASE WHEN arm = 1 THEN w * x ELSE 0 END)")
             .alias("swx_b"),
@@ -14341,20 +14365,7 @@ def ab_test_uplift(spark, sf_dir, n_boot: int = BOOT_B):
             ).alias("u_fp"),
         )
     )
-    wr = W.partitionBy("event_type").orderBy(F.asc("u_fp"), F.asc("b"))
-    wcnt = W.partitionBy("event_type")
-    ci = (
-        uplifts.withColumn("r", F.row_number().over(wr))
-        .withColumn("nrep", F.count("*").over(wcnt))
-        .groupBy("event_type")
-        .agg(
-            F.max(F.when(F.col("r") == 2, F.col("u_fp"))).alias("lo_fp"),
-            F.max(
-                F.when(F.col("r") == F.col("nrep") - 1, F.col("u_fp"))
-            ).alias("hi_fp"),
-        )
-        .where(F.col("lo_fp").isNotNull() & F.col("hi_fp").isNotNull())
-    )
+    ci = _boot_ci(uplifts, "u_fp")
     return point.join(ci, "event_type").select(
         "event_type", "n_a", "n_b", "uplift_fp", "lo_fp", "hi_fp",
         ((F.col("lo_fp") > 0) | (F.col("hi_fp") < 0)).cast("int")
@@ -14388,22 +14399,7 @@ point AS (
     FROM ev GROUP BY event_type)
   WHERE n_a > 0 AND n_b > 0
 ),
-hashed AS (
-  SELECT event_type, arm, x,
-         CAST(concat('0x', substr(md5(concat('ab:',
-              CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT)
-           % {_BOOT_P} AS h0
-  FROM ev
-),
-reps AS (
-  SELECT event_type, arm, x, b,
-         ((h0 * ([{_A_LIST}])[b + 1]
-           + ([{_C_LIST}])[b + 1]) % {_BOOT_P}) % 1000000 AS u
-  FROM hashed CROSS JOIN (SELECT unnest(range({BOOT_B})) AS b)
-),
-weighted AS (
-  SELECT event_type, arm, x, b, {_poisson_weight_sql('u')} AS w
-  FROM reps
+weighted AS ({_poisson_replicates_sql('ev', 'ab:', 'event_type, arm, x')}
 ),
 uplifts AS (
   SELECT event_type, b,
@@ -14422,20 +14418,7 @@ uplifts AS (
     FROM weighted GROUP BY event_type, b)
   WHERE sw_a > 0 AND sw_b > 0
 ),
-ranked AS (
-  SELECT event_type, u_fp,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY u_fp ASC, b ASC) AS r,
-         count(*) OVER (PARTITION BY event_type) AS nrep
-  FROM uplifts
-),
-ci AS (
-  SELECT event_type,
-         max(CASE WHEN r = 2 THEN u_fp END) AS lo_fp,
-         max(CASE WHEN r = nrep - 1 THEN u_fp END) AS hi_fp
-  FROM ranked GROUP BY event_type
-  HAVING max(CASE WHEN r = 2 THEN u_fp END) IS NOT NULL
-     AND max(CASE WHEN r = nrep - 1 THEN u_fp END) IS NOT NULL
+ci AS ({_boot_ci_sql('uplifts', 'u_fp')}
 )
 SELECT p.event_type, p.n_a, p.n_b, p.uplift_fp, c.lo_fp, c.hi_fp,
        CAST(c.lo_fp > 0 OR c.hi_fp < 0 AS INT) AS significant

@@ -84,7 +84,8 @@ def q1_pricing_summary(spark, sf_dir):
     n = F.count("*")
     qty_i = F.round(F.col("l_quantity")).cast("long")  # integral per spec
     # qty/disc sums stay LONG (decimal(38,0) aggregation is the
-    # measured 2x cost of this query — tools/q1_ab.py): qty ≤ 50 and
+    # measured 2x cost of this query — BENCH/BASELINE.md, "Q1
+    # decimal-vs-double A/B"): qty ≤ 50 and
     # disc_i ≤ 10^4 per row keep the long exact past 10^14 rows, with
     # ANSI overflow as the backstop; the price family can exceed int64
     # at 10^12 rows, so those three stay decimal. The post-agg rounding

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Scaling-efficiency evidence (BASELINE.json:14: ">=0.8 from N to 4N
-executors"). No real cluster exists in this sandbox, so per the driver
-instruction we run the IDENTICAL munge job at two parallelism levels —
-local[8] and local[32] (N and 4N cores) — on the same input, and report
-throughput at both plus efficiency = (T_4N/T_N)/4.
+executors"). No real cluster exists in this sandbox, so we run the
+IDENTICAL munge job at two parallelism levels — local[N] and local[4N],
+N = $SCALING_N_CORES (default a quarter of the usable CPUs) — on the same
+input, and report throughput at both plus efficiency = (T_4N/T_N)/4.
 
 Protocol:
 - the input corpus (realistic ~35-line OCR pages, seed=42) is written to
@@ -11,10 +11,12 @@ Protocol:
   production pipeline consumes its spans table (a columnar scan; feeding
   the Python stage from cached row objects serializes on JVM row→Arrow
   conversion and was the original scaling bug);
-- each level runs in a fresh subprocess (own JVM), does a full-width
-  Python-worker warmup, then times the munge pass; best of REPEATS.
+- each level runs in a fresh subprocess (own JVM) pinned with taskset to
+  its width, waits for a quiet host, does a full-width Python-worker
+  warmup, then times the munge pass; best of REPEATS clean attempts.
 
-Results are appended to BENCH/BASELINE.md and printed as one JSON line.
+Host load is read through perfbench/proctree.py, the benchmark's own
+accounting. Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -26,9 +28,12 @@ import sys
 import time
 from pathlib import Path
 
+from datamunging_spark.session import _usable_cpus
+from perfbench import proctree
+
 REPO = Path(__file__).resolve().parent
 N_DOCS = int(os.environ.get("SCALING_N_DOCS", "12000"))
-REPEATS = int(os.environ.get("SCALING_REPEATS", "3"))
+REPEATS = 3
 # SCALING_JOB=munge (OCR cascade) or extract (HTML/PDF main-content
 # extraction) — both are single-Python-stage span pipelines and both are
 # north-rule scaling subjects.
@@ -42,7 +47,7 @@ from datamunging_spark.session import get_spark
 from datamunging_spark.generator import corpus_to_rows, generate_corpus
 from datamunging_spark.operators.munge import INPUT_SCHEMA
 n_docs = int(sys.argv[1]); out = sys.argv[2]; job = sys.argv[3]
-spark = get_spark(app_name="scaling-gen", master="local[32]")
+spark = get_spark(app_name="scaling-gen")
 if job == "munge":
     docs = generate_corpus(seed=42, n_docs=n_docs, monster_frac=0.05)
     n_pages = sum(1 for _, spans in docs for s in spans if s.kind == "page")
@@ -62,6 +67,7 @@ CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
 from datamunging_spark.session import get_spark
+from perfbench import proctree
 cores = int(sys.argv[1]); data = sys.argv[2]; job = sys.argv[3]
 if job == "munge":
     from datamunging_spark.operators.munge import munge as op
@@ -72,22 +78,15 @@ spark = get_spark(app_name=f"scaling-{{cores}}", master=f"local[{{cores}}]",
 vols = spark.read.parquet(data)
 # full-width warmup: spawn every Python worker once
 op(vols, spark).write.mode("overwrite").format("noop").save()
-
-
-def cpu_sample():
-    v = list(map(int, open("/proc/stat").readline().split()[1:]))
-    return sum(v), v[3] + v[4], (v[7] if len(v) > 7 else 0)
-
-
-c0 = cpu_sample()
+c0 = proctree._cpu_sample()
 t0 = time.perf_counter()
 op(vols, spark).write.mode("overwrite").format("noop").save()
 wall = time.perf_counter() - t0
-c1 = cpu_sample()
+c1 = proctree._cpu_sample()
 dt = max(c1[0] - c0[0], 1)
 ncpu = os.cpu_count()
 print(json.dumps({{
-    "cores": cores, "wall_s": wall,
+    "wall_s": wall,
     # whole-host CPU accounting ACROSS the timed pass: this child is
     # taskset-pinned to `cores` CPUs, so host busy beyond `cores` is
     # foreign load, and steal is the hypervisor denying this VM cycles
@@ -98,62 +97,37 @@ spark.stop()
 """
 
 
-PIN = os.environ.get("SCALING_PIN", "1") != "0"
-
-# The two measured widths: N and 4N "executors" (cores). Default 8->32
-# fills the whole box; SCALING_N_CORES=2 measures 2->8, where BOTH
-# widths sit far below host capacity -- the closer emulation of
-# discrete executors that each bring their own silicon (the 8->32
-# comparison subdivides one oversubscribed host and inherits its
-# hypervisor ceiling; see host_ceiling()).
-N_CORES = int(os.environ.get("SCALING_N_CORES", "8"))
+# The two measured widths: N and 4N "executors" (cores). The default N
+# is a quarter of the usable CPUs, so 4N fills the box; a smaller N
+# (SCALING_N_CORES=2 on a 32-core host) puts BOTH widths far below host
+# capacity -- the closer emulation of discrete executors that each bring
+# their own silicon (subdividing one host inherits its hypervisor
+# ceiling; see host_ceiling()).
+N_CORES = int(os.environ.get("SCALING_N_CORES", str(max(1, _usable_cpus() // 4))))
 N4_CORES = 4 * N_CORES
 
 # Load-gated protocol (round-2 verdict item 4): this host is shared and
-# its timing noise is load-correlated (BENCH/BASELINE.md), so a
-# reproducible quiet-window measurement must WAIT for quiet instead of
-# hoping. With SCALING_LOAD_GATE=B (>0), every timed child blocks until
-# the INSTANTANEOUS whole-host busy-core count (two /proc/stat samples
-# 1 s apart — the same accounting BENCH/BASELINE.md's load analysis
-# uses) is <= B (give up after SCALING_GATE_TIMEOUT seconds and
-# proceed). /proc/stat reacts immediately when a previous child exits,
-# where the 1-min load average needs minutes to decay past its own
-# finished burst; what the gate must catch is CPU that will be busy
-# DURING the run, which only an instantaneous measure sees. The
-# observed busy-cores before each timed repeat is carried into the
-# output so a reader can audit whether the gate actually held.
-GATE = float(os.environ.get("SCALING_LOAD_GATE", "0"))
-GATE_TIMEOUT = float(os.environ.get("SCALING_GATE_TIMEOUT", "1800"))
-
-
-def _busy_cores(interval: float = 1.0) -> float:
-    def sample():
-        parts = open("/proc/stat").readline().split()[1:]
-        vals = list(map(int, parts))
-        idle = vals[3] + vals[4]  # idle + iowait
-        return sum(vals), idle
-
-    t1, i1 = sample()
-    time.sleep(interval)
-    t2, i2 = sample()
-    dt = t2 - t1
-    return os.cpu_count() * (1.0 - (i2 - i1) / dt) if dt else 0.0
+# its timing noise is load-correlated (BENCH/BASELINE.md), so every timed
+# child first WAITS until the instantaneous whole-host busy-core count
+# (host CPU counters over 1 s) is <= GATE, giving up after GATE_TIMEOUT
+# seconds. The counters react at once when a previous child exits, where
+# the 1-min load average needs minutes to decay past its own burst.
+GATE = 2.0
+GATE_TIMEOUT = 1800.0
 
 
 def _wait_quiet() -> float:
-    busy = _busy_cores()
-    if not GATE:
-        return busy
     t0 = time.time()
+    busy = proctree.host_load(interval=1.0)["busy_cores"]
     while busy > GATE and time.time() - t0 < GATE_TIMEOUT:
         time.sleep(5)
-        busy = _busy_cores()
+        busy = proctree.host_load(interval=1.0)["busy_cores"]
     return busy
 
 
 def _run(code: str, *args: str, cores: int | None = None) -> dict:
     cmd = [sys.executable, "-c", code.format(repo=str(REPO)), *args]
-    if cores is not None and PIN:
+    if cores is not None:
         # Pin the whole process tree (JVM + Python workers) to exactly
         # `cores` CPUs: an honest N-core executor, not "N task threads
         # free-riding on a 32-core host for GC/Arrow/Python work".
@@ -172,42 +146,35 @@ def _run(code: str, *args: str, cores: int | None = None) -> dict:
 # cores + FOREIGN_SLACK — or steal beyond STEAL_SLACK — marks the repeat
 # contaminated and it is retried (up to MAX_TRIES child runs per level).
 # Every attempt, accepted or not, is carried into the output for audit.
-FOREIGN_SLACK = float(os.environ.get("SCALING_FOREIGN_SLACK", "1.5"))
-STEAL_SLACK = float(os.environ.get("SCALING_STEAL_SLACK", "1.0"))
-MAX_TRIES = int(os.environ.get("SCALING_MAX_TRIES", str(REPEATS * 3)))
+FOREIGN_SLACK = 1.5
+STEAL_SLACK = 1.0
+MAX_TRIES = REPEATS * 3
 
 
 def run_level(cores: int) -> dict:
     attempts: list[dict] = []
-    accepted: list[dict] = []
-    while len(accepted) < REPEATS and len(attempts) < MAX_TRIES:
+    clean: list[dict] = []
+    while len(clean) < REPEATS and len(attempts) < MAX_TRIES:
         gate_busy = _wait_quiet()
         res = _run(CHILD, str(cores), str(DATA), JOB, cores=cores)
-        res["gate_busy"] = round(gate_busy, 2)
         # busy beyond the pinned width is foreign load on OTHER cpus (a
         # lower bound on interference: a neighbor sharing the pinned
         # cpus shows up in wall/steal, not busy)
-        res["foreign_during"] = round(max(res["busy_during"] - cores, 0.0), 2)
-        res["steal_during"] = round(res["steal_during"], 2)
-        res["busy_during"] = round(res["busy_during"], 2)
-        res["contaminated"] = (
-            res["foreign_during"] > FOREIGN_SLACK
-            or res["steal_during"] > STEAL_SLACK
-        )
-        attempts.append(res)
-        if not res["contaminated"]:
-            accepted.append(res)
-    pool = accepted or attempts  # all-contaminated: report honestly
-    best = dict(min(pool, key=lambda r: r["wall_s"]))
-    best["n_attempts"] = len(attempts)
-    best["n_clean"] = len(accepted)
-    best["attempts"] = [
-        {k: r[k] for k in (
-            "wall_s", "gate_busy", "foreign_during", "steal_during",
-            "contaminated")}
-        for r in attempts
-    ]
-    return best
+        foreign = max(res["busy_during"] - cores, 0.0)
+        attempts.append({
+            "wall_s": round(res["wall_s"], 3),
+            "gate_busy": gate_busy,
+            "foreign_during": round(foreign, 2),
+            "steal_during": round(res["steal_during"], 2),
+            "contaminated": foreign > FOREIGN_SLACK
+            or res["steal_during"] > STEAL_SLACK,
+        })
+        if not attempts[-1]["contaminated"]:
+            clean.append(attempts[-1])
+    # all-contaminated: report the best contaminated wall, flagged
+    best = min(clean or attempts, key=lambda r: r["wall_s"])
+    return {"wall_s": best["wall_s"], "n_clean": len(clean),
+            "n_attempts": len(attempts), "attempts": attempts}
 
 
 CEILING = r"""
@@ -260,74 +227,39 @@ def main() -> None:
     pages = json.loads((DATA / "_meta.json").read_text())["pages"]
 
     ceil = host_ceiling()
-    r8 = run_level(N_CORES)
-    r32 = run_level(N4_CORES)
-    t8, t32 = pages / r8["wall_s"], pages / r32["wall_s"]
-    speedup = t32 / t8
+    rn = run_level(N_CORES)
+    r4n = run_level(N4_CORES)
+    tn, t4n = pages / rn["wall_s"], pages / r4n["wall_s"]
+    speedup = t4n / tn
     eff = speedup / 4.0
+    dirty = rn["n_clean"] == 0 or r4n["n_clean"] == 0
     result = {
         "job": JOB,
         "n_docs": N_DOCS,
         "pages": pages,
         "n_cores": N_CORES,
-        "local_n_wall_s": round(r8["wall_s"], 3),
-        "local_n_pages_per_sec": round(t8, 1),
-        "local_4n_wall_s": round(r32["wall_s"], 3),
-        "local_4n_pages_per_sec": round(t32, 1),
+        "local_n_wall_s": round(rn["wall_s"], 3),
+        "local_n_pages_per_sec": round(tn, 1),
+        "local_4n_wall_s": round(r4n["wall_s"], 3),
+        "local_4n_pages_per_sec": round(t4n, 1),
         "speedup_n_to_4n": round(speedup, 3),
         "scaling_efficiency": round(eff, 3),
         **ceil,
         "fraction_of_host_ceiling": round(
             speedup / ceil["ceiling_speedup"], 3
         ),
-        "pinned": PIN,
-        "load_gate": GATE or None,
-        "clean_n": f"{r8['n_clean']}/{r8['n_attempts']}",
-        "clean_4n": f"{r32['n_clean']}/{r32['n_attempts']}",
-        "attempts_n": r8["attempts"],
-        "attempts_4n": r32["attempts"],
+        "load_gate": GATE,
+        "clean_n": f"{rn['n_clean']}/{rn['n_attempts']}",
+        "clean_4n": f"{r4n['n_clean']}/{r4n['n_attempts']}",
+        "attempts_n": rn["attempts"],
+        "attempts_4n": r4n["attempts"],
         "target": 0.8,
         # a level whose every repeat was contaminated fell back to the
         # contaminated pool (run_level reports honestly) — flag it at the
         # top level and refuse to claim the target either way (ADVICE r3)
-        "all_contaminated": r8["n_clean"] == 0 or r32["n_clean"] == 0,
-        "meets_target": (
-            None
-            if r8["n_clean"] == 0 or r32["n_clean"] == 0
-            else eff >= 0.8
-        ),
+        "all_contaminated": dirty,
+        "meets_target": None if dirty else eff >= 0.8,
     }
-    md = REPO / "BENCH" / "BASELINE.md"
-    md.parent.mkdir(exist_ok=True)
-    lines = [
-        "",
-        f"## Scaling run — {JOB} job ({N_DOCS} docs, {pages} {'pages' if JOB == 'munge' else 'html+pdf spans'}, seed=42, parquet input, {'pinned' if PIN else 'unpinned'}"
-        + (f", gated at ≤{GATE:g} busy cores, in-run contamination retry (foreign >{FOREIGN_SLACK:g} or steal >{STEAL_SLACK:g} cores ⇒ rerun): clean repeats N {result['clean_n']}, 4N {result['clean_4n']}" if GATE else "")
-        + ")",
-        "",
-        "Per-attempt audit (wall s / gate busy / foreign during / steal during / contaminated): "
-        f"N-core {[(a['wall_s'].__round__(2), a['gate_busy'], a['foreign_during'], a['steal_during'], a['contaminated']) for a in result['attempts_n']]}; "
-        f"4N-core {[(a['wall_s'].__round__(2), a['gate_busy'], a['foreign_during'], a['steal_during'], a['contaminated']) for a in result['attempts_4n']]}",
-        "",
-        "| cores | wall (s) | pages/sec |",
-        "|---|---|---|",
-        f"| local[{N_CORES}]  (N)  | {result['local_n_wall_s']} | {result['local_n_pages_per_sec']} |",
-        f"| local[{N4_CORES}] (4N) | {result['local_4n_wall_s']} | {result['local_4n_pages_per_sec']} |",
-        "",
-        f"Speedup N→4N ({N_CORES}→{N4_CORES}): **{result['speedup_n_to_4n']}×**, scaling efficiency "
-        f"(speedup/4): **{result['scaling_efficiency']}** "
-        f"(target ≥ 0.8 → "
-        f"{'UNVERIFIABLE: every repeat at some level was contaminated' if result['all_contaminated'] else ('MET' if result['meets_target'] else 'NOT MET')})",
-        "",
-        f"Host ceiling (pure-ALU multiprocessing, same pinning, no steal/"
-        f"foreign): {result['ceiling_speedup']}× "
-        f"(eff {result['ceiling_efficiency']}) — the pipeline achieves "
-        f"**{result['fraction_of_host_ceiling']}** of the host-achievable "
-        f"8→32 scaling.",
-        "",
-    ]
-    with open(md, "a") as f:
-        f.write("\n".join(lines))
     print(json.dumps(result))
 
 

@@ -4383,6 +4383,50 @@ def test_bootstrap_ci_brackets_exact_mean(spark):
         assert int(r.lo_fp) < int(r.hi_fp)
 
 
+def test_bootstrap_replicates_with_zero_weight_are_dropped(spark, tmp_path):
+    """A one-row event_type weighs 0 in about e^-1 of its 64 Poisson
+    replicates. Those replicates have no mean: both engines drop them
+    and rank the CI against the survivors, so Spark (NULLS FIRST) and
+    DuckDB (NULLS LAST) agree, and the CI of a constant is the constant.
+    ab_test_uplift's two-row type (one row per arm) loses every
+    replicate that zeroes either arm."""
+    import hashlib
+
+    from datamunging_spark.ml_ops import (
+        _BOOT_A, _BOOT_C, _BOOT_P, _POIS_CDF_PPM,
+    )
+
+    solo_id = 1_000_000
+    h0 = int(hashlib.md5(f"bs:{solo_id}".encode()).hexdigest()[:15], 16)
+    zero = sum(
+        ((h0 % _BOOT_P * a + c) % _BOOT_P) % 1_000_000 < _POIS_CDF_PPM[0]
+        for a, c in zip(_BOOT_A, _BOOT_C)
+    )
+    assert zero == 25  # ranks 1..25 would be NULL without the drop
+    path = f"{tmp_path}/events.parquet"
+    duckdb.sql(
+        "COPY (SELECT * FROM read_parquet('"
+        f"{SF_DIR}/events.parquet') UNION ALL "
+        f"SELECT {solo_id}, TIMESTAMP '2024-01-02', 1, 'solo', 12.5, NULL "
+        f"UNION ALL SELECT {solo_id + 1}, TIMESTAMP '2024-01-02', 2, "
+        f"'pair', 5.0, NULL UNION ALL SELECT {solo_id + 2}, "
+        f"TIMESTAMP '2024-01-02', 3, 'pair', 7.0, NULL) TO '{path}'"
+    )
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    for name in ("bootstrap_ci", "ab_test_uplift"):
+        fn, sql = ML_QUERIES[name]
+        got = fn(spark, str(tmp_path)).toPandas()
+        assert _rows(got) == _rows(con.sql(sql).df()), name
+        if name == "bootstrap_ci":
+            solo = got[got.event_type == "solo"].iloc[0]
+            assert (int(solo.n), int(solo.lo_fp), int(solo.hi_fp)) == (
+                1, 125000, 125000
+            )
+        else:
+            assert "pair" in set(got.event_type)  # 31 replicates survive
+
+
 def test_text_tiling_boundaries_are_local_minima(spark):
     """Every flagged boundary must be under the threshold and strictly
     below both neighbors (sentinel at the edges)."""

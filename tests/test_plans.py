@@ -1240,13 +1240,17 @@ def test_record_linkage_scorer_is_codegen_case(spark, sf_dir):
 def test_bootstrap_ci_partial_aggregates_replicates(spark, sf_dir):
     """The 64x replicate explode must collapse map-side (partial_sum
     before the exchange) so the shuffle carries group x replicate
-    partials, not 64x the data; one md5 per row, not per replicate."""
-    from datamunging_spark.ml_ops import bootstrap_ci
+    partials, not 64x the data; one md5 per row, not per replicate:
+    the md5 is computed below the Generate (after it in the plan text).
+    ab_test_uplift shares the replicate builder."""
+    from datamunging_spark.ml_ops import ab_test_uplift, bootstrap_ci
 
-    plan = plan_of(bootstrap_ci(spark, sf_dir))
-    assert "partial_sum" in plan
-    assert plan.count("md5(") <= 2  # once per scan branch, not per b
-    assert "EvalPython" not in plan
+    for fn in (bootstrap_ci, ab_test_uplift):
+        plan = plan_of(fn(spark, sf_dir))
+        assert "partial_sum" in plan
+        assert plan.count("md5(") <= 2  # once per scan branch, not per b
+        assert plan.index("md5(") > plan.index("Generate explode")
+        assert "EvalPython" not in plan
 
 
 def test_text_tiling_intersection_is_equijoin(spark, sf_dir):
