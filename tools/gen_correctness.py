@@ -11,6 +11,11 @@ rows_match / schema_match / hash_match / spark_rows / oracle_rows /
 err — plus ``oracle: "rows-only"`` for the few entries that are
 non-SQL-expressible by nature (their invariants live in pytest).
 
+Every record, the rows-only ones included, also carries ``value_hash``:
+the hash of the Spark result alone. ``hash_match`` compares the two
+engines, so a change that moves both the same way keeps it True;
+``value_hash`` pins the result itself across changes.
+
 Comparison semantics mirror tests/test_queries_oracle.py (the strictest
 reading of the driver's order-insensitive value-hash): columns sorted
 by name, values canonicalized (floats rounded to 9 places, NaN tagged,
@@ -73,9 +78,10 @@ def main() -> None:
         try:
             got = fn(spark, SF_DIR).toPandas()
             rec["spark_rows"] = len(got)
+            gc, gr = _rows(got)
+            rec["value_hash"] = _hash(gc, gr)
             if name in osql:
                 want = con.sql(osql[name]).df()
-                gc, gr = _rows(got)
                 wc, wr = _rows(want)
                 rec.update(
                     oracle_rows=len(want),
