@@ -93,7 +93,7 @@ DRIVER_PRIORITY = [
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the full OCR-munge extraction cascade over an
     interleaved text+media spans table synthesized from sf0.001
-    documents — one Arrow-batched mapInPandas pass (BASELINE.json:6)."""
+    documents — one pass of ``munge``'s ``mapInArrow`` (BASELINE.json:6)."""
     return extract_munge(spark, "/root/testdata/sf0.001")
 
 

@@ -43,21 +43,18 @@ from .functions import (
     tokens_distinct,
     word_shingles,
 )
-from .queries import t
+from .functions.hashing import (
+    md5_long_py,
+    md5_long_sql,
+    md5_long_tag as _md5_long,
+    md5_tag_sql,
+    md5_u01 as _md5_u01,
+)
+from .queries import t, try_cast_int_sql
 
 STOPWORDS_EN = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "value"]
 STOPWORDS_DE = ["der", "die", "das", "und", "ist", "von", "mit", "ein", "zu"]
 STOPWORDS_FR = ["le", "la", "les", "et", "de", "un", "une", "est", "pour"]
-
-
-def _md5_long(tag, key_col):
-    """Tagged md5 int64 — composes the module's core md5_long idiom."""
-    return md5_long(F.concat(F.lit(tag), key_col.cast("string")))
-
-
-def _md5_u01(tag, key_col):
-    """md5-uniform in [0,1) keyed on (tag, key) — engine-replayable."""
-    return _md5_long(tag, key_col) / F.lit(float(1 << 60))
 
 
 # --------------------------------------------------------------------------
@@ -469,16 +466,16 @@ def _minhash_replay_ctes() -> str:
             f"CAST({signed(f's{b * ROWS_PER_BAND + r}')} AS VARCHAR)"
             for r in range(ROWS_PER_BAND)
         )
+        band_hash = md5_long_sql(f"concat_ws('|', {parts})")
         band_selects.append(
             f"SELECT doc_id, {b} AS band_id,\n"
-            f"  CAST(concat('0x', substr(md5(concat_ws('|', {parts})), 1, 15))"
-            f" AS BIGINT) AS band_hash FROM sigs"
+            f"  {band_hash} AS band_hash FROM sigs"
         )
     bands_sql = "\n  UNION ALL\n  ".join(band_selects)
     return f"""{_SH3_SQL.strip()},
 hashes AS (
   SELECT doc_id,
-         CAST(concat('0x', substr(md5(unnest(sh)), 1, 15)) AS BIGINT) AS h
+         {md5_long_sql("unnest(sh)")} AS h
   FROM sh
 ),
 sigs AS (
@@ -559,7 +556,7 @@ WITH toks AS (
   SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
 ),
 h AS (
-  SELECT doc_id, CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS h
+  SELECT doc_id, {md5_long_sql("tok")} AS h
   FROM toks
 ),
 votes AS (
@@ -770,8 +767,7 @@ g AS (
 ),
 h AS (
   SELECT g.doc_id, g.m, g.pos,
-         CAST(concat('0x', substr(md5(substr(b.txt, g.pos, {WINNOW_K})), 1, 15))
-              AS BIGINT) AS h
+         {md5_long_sql(f"substr(b.txt, g.pos, {WINNOW_K})")} AS h
   FROM g JOIN base b USING (doc_id)
 ),
 w AS (
@@ -1853,8 +1849,7 @@ def pack_shards(spark, sf_dir, n_groups: int | None = None,
 PACK_SHARDS_SQL = f"""
 WITH d AS (
   SELECT doc_id, len(string_split(text, ' ')) AS nt,
-         CAST(concat('0x', substr(md5(concat('pack:', CAST(doc_id AS VARCHAR))), 1, 15))
-              AS BIGINT) AS k
+         {md5_tag_sql('pack:', 'doc_id')} AS k
   FROM documents
 ),
 g AS (SELECT doc_id, nt, k, k % {PACK_GROUPS} AS grp FROM d),
@@ -1964,8 +1959,7 @@ def _pack_shards_bfd_sql(n_groups: int = PACK_GROUPS,
     return f"""
 WITH RECURSIVE d AS (
   SELECT doc_id, len(string_split(text, ' ')) AS nt,
-         CAST(concat('0x', substr(md5(concat('pack:',
-              CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) AS k
+         {md5_tag_sql('pack:', 'doc_id')} AS k
   FROM documents
 ),
 g AS (
@@ -2183,10 +2177,7 @@ def decontaminate_bloom(spark, sf_dir, m_bits: int = BLOOM_M_BITS):
 
 
 def _bloom_pos_sql(col: str, i: int) -> str:
-    return (
-        f"CAST(concat('0x', substr(md5(concat('bloom{i}:', {col})), 1, 15))"
-        f" AS BIGINT) % {BLOOM_M_BITS}"
-    )
+    return md5_long_sql(f"concat('bloom{i}:', {col})") + f" % {BLOOM_M_BITS}"
 
 
 DECONTAMINATE_BLOOM_SQL = f"""
@@ -2462,12 +2453,6 @@ RESIZE_TARGET = 224
 FRAME_SAMPLE_K = 4
 
 
-def _md5_int15(s: str) -> int:
-    import hashlib
-
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
 RESIZE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -2490,8 +2475,8 @@ def _resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             h = pd.Series([d[1] for d in dims])
         else:
             # deterministic fake decode: dims from md5 of the payload
-            w = texts.map(lambda s: _md5_int15("w:" + s) % 640 + 1)
-            h = texts.map(lambda s: _md5_int15("h:" + s) % 480 + 1)
+            w = texts.map(lambda s: md5_long_py("w:" + s) % 640 + 1)
+            h = texts.map(lambda s: md5_long_py("h:" + s) % 480 + 1)
         # REAL resize math: aspect-preserving fit into TARGET x TARGET,
         # never upscale
         scale = pd.concat(
@@ -2524,10 +2509,8 @@ def multimodal_resize(spark, sf_dir):
 MULTIMODAL_RESIZE_SQL = f"""
 WITH decoded AS (
   SELECT doc_id,
-         CAST(concat('0x', substr(md5(concat('w:', text)), 1, 15)) AS BIGINT)
-             % 640 + 1 AS width,
-         CAST(concat('0x', substr(md5(concat('h:', text)), 1, 15)) AS BIGINT)
-             % 480 + 1 AS height
+         {md5_long_sql("concat('w:', text)")} % 640 + 1 AS width,
+         {md5_long_sql("concat('h:', text)")} % 480 + 1 AS height
   FROM documents WHERE doc_id < 100
 )
 SELECT doc_id,
@@ -2568,7 +2551,7 @@ def _frame_sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
                 out["doc_id"].append(doc_id)
                 out["n_frames"].append(n_frames)
                 out["frame_idx"].append(idx)
-                out["frame_hash"].append(_md5_int15(text + ":" + str(idx)))
+                out["frame_hash"].append(md5_long_py(text + ":" + str(idx)))
         yield pd.DataFrame(
             {
                 "doc_id": pd.Series(out["doc_id"], dtype="int64"),
@@ -2607,9 +2590,8 @@ j AS (
 )
 SELECT doc_id, n_frames,
        CAST(floor(jj * (n_frames - 1) / greatest(k - 1, 1)) AS INT) AS frame_idx,
-       CAST(concat('0x', substr(md5(concat(text, ':',
-            CAST(CAST(floor(jj * (n_frames - 1) / greatest(k - 1, 1)) AS INT)
-                 AS VARCHAR))), 1, 15)) AS BIGINT) AS frame_hash
+       {md5_long_sql("concat(text, ':', CAST(CAST(floor(jj * (n_frames - 1) "
+                     "/ greatest(k - 1, 1)) AS INT) AS VARCHAR))")} AS frame_hash
 FROM j ORDER BY doc_id, frame_idx
 """
 
@@ -3082,7 +3064,7 @@ def hash_split(spark, sf_dir):
     )
 
 
-HASH_SPLIT_SQL = """
+HASH_SPLIT_SQL = f"""
 SELECT split, lang, count(*) AS n_docs, round(avg(n_chars), 4) AS avg_chars
 FROM (
   SELECT CASE WHEN b < 80 THEN 'train'
@@ -3090,9 +3072,7 @@ FROM (
               ELSE 'test' END AS split,
          lang, n_chars
   FROM (
-    SELECT lang, n_chars,
-           CAST(concat('0x', substr(md5(concat('split:',
-                CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 100 AS b
+    SELECT lang, n_chars, {md5_tag_sql('split:', 'doc_id')} % 100 AS b
     FROM documents
   )
 )
@@ -3119,15 +3099,13 @@ def stratified_sample(spark, sf_dir, k: int = 20):
     )
 
 
-STRATIFIED_SAMPLE_SQL = """
+STRATIFIED_SAMPLE_SQL = f"""
 SELECT lang, CAST(rn AS INT) AS rn, doc_id FROM (
   SELECT lang, doc_id,
          row_number() OVER (PARTITION BY lang ORDER BY h, doc_id) AS rn
   FROM (
     SELECT doc_id, lang,
-           CAST(concat('0x', substr(md5(concat('sample:',
-                CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-             % 1000000007 AS h
+           {md5_tag_sql('sample:', 'doc_id')} % 1000000007 AS h
     FROM documents
   )
 ) WHERE rn <= 20 ORDER BY lang, rn
@@ -3252,9 +3230,7 @@ FROM (
               ELSE 'test' END AS split,
          lang, nt
   FROM (
-    SELECT lang, nt,
-           CAST(concat('0x', substr(md5(concat('split:',
-                CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 100 AS b
+    SELECT lang, nt, {md5_tag_sql('split:', 'doc_id')} % 100 AS b
     FROM gated
   )
 )
@@ -3943,8 +3919,7 @@ URL_DOMAIN_SQL = f"""
 WITH u AS (
   SELECT doc_id, lang, n_chars, source,
          concat('https://www.', source, '.',
-           CASE CAST(concat('0x', substr(md5(concat('tld:', source)), 1, 15))
-                     AS BIGINT) % 3
+           CASE {md5_long_sql("concat('tld:', source)")} % 3
              WHEN 0 THEN 'com' WHEN 1 THEN 'org' ELSE 'net' END,
            '/', lang, '/doc/', CAST(doc_id AS VARCHAR),
            CASE WHEN doc_id % 3 = 0 THEN '?ref=feed' ELSE '' END) AS url
@@ -4016,16 +3991,14 @@ def quality_classifier(spark, sf_dir):
     )
 
 
+_QC_BUCKET_SQL = md5_long_sql("concat('qb:', tok)") + f" % {QC_BUCKETS}"
 QUALITY_CLASSIFIER_SQL = f"""
 WITH scored AS (
   SELECT doc_id,
          CAST(len(string_split(lower(text), ' ')) AS INT) AS n_tokens,
          round(1.0 / (1.0 + exp(-4.0 *
            list_sum(list_transform(string_split(lower(text), ' '),
-             tok -> (CAST(concat('0x', substr(md5(concat('qw:',
-                       CAST(CAST(concat('0x', substr(md5(concat('qb:', tok)),
-                                 1, 15)) AS BIGINT) % {QC_BUCKETS}
-                            AS VARCHAR))), 1, 15)) AS BIGINT)
+             tok -> ({md5_tag_sql('qw:', _QC_BUCKET_SQL)}
                      % 2001 - 1000) / 1000.0))
            / len(string_split(lower(text), ' ')))), 6) AS score
   FROM documents WHERE doc_id < 300
@@ -4081,11 +4054,9 @@ GLOBAL_SHUFFLE_SQL = f"""
 WITH s AS (
   SELECT doc_id,
          md5(concat('shuffle:42:', CAST(doc_id AS VARCHAR))) AS key,
-         CAST(CAST(concat('0x', substr(md5(concat('shard:',
-              CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-              % {SHUFFLE_SHARDS} AS INT) AS shard,
-         CAST(concat('0x', substr(md5(concat('dig:',
-              CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 1000003 AS h
+         CAST({md5_tag_sql('shard:', 'doc_id')} % {SHUFFLE_SHARDS} AS INT)
+           AS shard,
+         {md5_tag_sql('dig:', 'doc_id')} % 1000003 AS h
   FROM documents
 ),
 p AS (
@@ -4420,10 +4391,10 @@ WITH d AS (
 flags AS (
   SELECT doc_id, w,
          list_transform(range(0, len(w)),
-           i -> CAST(concat('0x', substr(md5(concat('corrupt:',
-                  CAST(doc_id AS VARCHAR), ':',
-                  CAST(i // {CORRUPT_SPAN_LEN} AS VARCHAR))), 1, 15))
-                AS BIGINT) / {float(1 << 60)} < {CORRUPT_MASK_RATE}
+           i -> {md5_long_sql(
+                  "concat('corrupt:', CAST(doc_id AS VARCHAR), ':', "
+                  f"CAST(i // {CORRUPT_SPAN_LEN} AS VARCHAR))")}
+                / {float(1 << 60)} < {CORRUPT_MASK_RATE}
          ) AS m
   FROM d
 )
@@ -4507,8 +4478,7 @@ def importance_resample(spark, sf_dir):
 IMPORTANCE_RESAMPLE_SQL = f"""
 WITH toks AS (
   SELECT doc_id, lang,
-         CAST(concat('0x', substr(md5(concat('dsir:', tok)), 1, 15))
-              AS BIGINT) % {DSIR_BUCKETS} AS b
+         {md5_long_sql("concat('dsir:', tok)")} % {DSIR_BUCKETS} AS b
   FROM (SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS tok
         FROM documents)
 ),
@@ -4530,9 +4500,7 @@ scored AS (
   FROM toks k JOIN model m USING (b) GROUP BY doc_id
 )
 SELECT doc_id, importance,
-       CAST(concat('0x', substr(md5(concat('dsirkeep:',
-            CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-         / {float(1 << 60)}
+       {md5_tag_sql('dsirkeep:', 'doc_id')} / {float(1 << 60)}
          < 1.0 / (1.0 + exp(-8.0 * importance)) AS keep
 FROM scored WHERE doc_id < 300 ORDER BY doc_id
 """
@@ -5488,21 +5456,10 @@ ML_QUERIES["zorder_layout"] = (zorder_layout, _zorder_sql())
 def _url_surface_sql(dialect: str) -> str:
     """The synthesized surface URL, identical arithmetic per dialect —
     only the md5->int64 idiom and STRING/VARCHAR spelling differ."""
-    if dialect == "spark":
-        def h(salt: str, m: int) -> str:
-            return (
-                f"(CAST(conv(substring(md5(concat('{salt}', "
-                f"CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-                f" % {m})"
-            )
-        s = "STRING"
-    else:
-        def h(salt: str, m: int) -> str:
-            return (
-                f"(CAST(concat('0x', substr(md5(concat('{salt}', "
-                f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % {m})"
-            )
-        s = "VARCHAR"
+    def h(salt: str, m: int) -> str:
+        return f"({md5_tag_sql(salt, 'doc_id', dialect)} % {m})"
+
+    s = "STRING" if dialect == "spark" else "VARCHAR"
     return (
         "concat("
         f"CASE {h('uscheme:', 4)} WHEN 0 THEN 'http' WHEN 1 THEN 'https'"
@@ -5678,17 +5635,41 @@ def _md5_links(docs: DataFrame, n: int, tag: str, drop_dangling: bool) -> DataFr
     distinct). ``drop_dangling`` gives every doc with doc_id %
     _PR_DANGLE_MOD == 3 no out-links."""
 
-    def h(j: int) -> str:
-        return (
-            f"(CAST(conv(substring(md5(concat('{tag}{j}:', "
-            f"CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % {n})"
-        )
-
     if drop_dangling:
         docs = docs.where(F.expr(f"doc_id % {_PR_DANGLE_MOD} <> 3"))
+    dsts = ", ".join(_link_dsts(tag, n, "spark"))
     return docs.selectExpr(
-        "doc_id AS src", f"explode(array({h(0)}, {h(1)}, {h(2)})) AS dst"
+        "doc_id AS src", f"explode(array({dsts})) AS dst"
     ).where("dst <> src")
+
+
+def _link_dsts(tag: str, n, dialect: str) -> list[str]:
+    """The three link targets of doc_id, as SQL text in ``dialect``."""
+    return [
+        f"({md5_tag_sql(f'{tag}{j}:', 'doc_id', dialect)} % {n})" for j in range(3)
+    ]
+
+
+def _md5_links_sql(tag: str, drop_dangling: bool, ue: str | None = None) -> str:
+    """DuckDB twin of ``_md5_links``, as CTEs to follow ``WITH``: ``cnt``
+    (the node count ``n``) and ``cand`` (the ``(src, dst)`` links,
+    duplicates kept). With ``ue``, a third CTE of that name holds the
+    distinct undirected edges ``(u, v)``, ``u < v``."""
+    keep = f" WHERE doc_id % {_PR_DANGLE_MOD} <> 3" if drop_dangling else ""
+    links = " UNION ALL ".join(
+        f"SELECT doc_id AS src, {d} AS dst FROM documents, cnt{keep}"
+        for d in _link_dsts(tag, "n", "duckdb")
+    )
+    sql = (
+        "cnt AS (SELECT count(*) AS n FROM documents), "
+        f"cand AS (SELECT src, dst FROM ({links}) WHERE dst <> src)"
+    )
+    if ue:
+        sql += (
+            f", {ue} AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS u, "
+            "greatest(src, dst) AS v FROM cand)"
+        )
+    return sql
 
 
 def pagerank_links(spark, sf_dir, n_iters: int = _PR_ITERS):
@@ -5746,22 +5727,10 @@ def pagerank_links(spark, sf_dir, n_iters: int = _PR_ITERS):
 
 
 def _pagerank_sql(n_iters: int = _PR_ITERS) -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
     teleport = (15 * _PR_SCALE) // 100
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt "
-        f"WHERE doc_id % {_PR_DANGLE_MOD} <> 3"
-        for j in range(3)
-    )
     parts = [
-        f"WITH cnt AS (SELECT count(*) AS n FROM documents), "
-        f"cand AS ({cand}), "
-        "edges AS (SELECT DISTINCT src, dst FROM cand WHERE dst <> src), "
+        f"WITH {_md5_links_sql('pr', True)}, "
+        "edges AS (SELECT DISTINCT src, dst FROM cand), "
         "deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src), "
         f"r0 AS (SELECT doc_id AS id, CAST({_PR_SCALE} AS BIGINT) AS r "
         "FROM documents)"
@@ -6221,17 +6190,13 @@ WITH d0 AS (
 ),
 d1 AS (
   SELECT *, len(w) AS n,
-    CAST(concat('0x', substr(md5(concat('fim:apply:',
-         CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-      / {float(1 << 60)} < {FIM_RATE} AS is_fim,
-    CAST(concat('0x', substr(md5(concat('fim:c1:',
-         CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % (len(w) + 1)
-      AS cut1
+    {md5_tag_sql('fim:apply:', 'doc_id')} / {float(1 << 60)} < {FIM_RATE}
+      AS is_fim,
+    {md5_tag_sql('fim:c1:', 'doc_id')} % (len(w) + 1) AS cut1
   FROM d0
 ),
 d2 AS (
-  SELECT *, cut1 + CAST(concat('0x', substr(md5(concat('fim:c2:',
-         CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % (n - cut1 + 1)
+  SELECT *, cut1 + {md5_tag_sql('fim:c2:', 'doc_id')} % (n - cut1 + 1)
       AS cut2
   FROM d1
 ),
@@ -6488,10 +6453,8 @@ def span_interval_merge(spark, sf_dir):
 
 def _span_merge_sql() -> str:
     def h(tag: str) -> str:
-        return (
-            f"CAST(concat('0x', substr(md5(concat('{tag}', "
-            f"CAST(doc_id AS VARCHAR), ':', CAST(j AS VARCHAR))), 1, 15)) "
-            f"AS BIGINT)"
+        return md5_long_sql(
+            f"concat('{tag}', CAST(doc_id AS VARCHAR), ':', CAST(j AS VARCHAR))"
         )
 
     return f"""
@@ -6614,27 +6577,15 @@ def anchor_text_agg(spark, sf_dir):
 
 
 def _anchor_agg_sql() -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
     vocab = ", ".join(f"'{a}'" for a in _ANCHOR_VOCAB)
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt"
-        for j in range(3)
-    )
     return f"""
-WITH cnt AS (SELECT count(*) AS n FROM documents),
-links AS ({cand}),
+WITH {_md5_links_sql('pr', False)},
 edges AS (
   SELECT src, dst,
-         ([{vocab}])[1 + CAST(
-           CAST(concat('0x', substr(md5(concat('anchor:',
-             CAST(src AS VARCHAR), ':', CAST(dst AS VARCHAR))), 1, 15))
-           AS BIGINT) % {len(_ANCHOR_VOCAB)} AS INT)] AS anchor
-  FROM links WHERE dst <> src
+         ([{vocab}])[1 + CAST({md5_long_sql(
+           "concat('anchor:', CAST(src AS VARCHAR), ':', CAST(dst AS VARCHAR))")}
+           % {len(_ANCHOR_VOCAB)} AS INT)] AS anchor
+  FROM cand
 ),
 per_pair AS (
   SELECT dst, anchor, CAST(count(*) AS BIGINT) AS cnt
@@ -7192,10 +7143,7 @@ def dedup_levenshtein(spark, sf_dir):
 
 
 def _dedup_levenshtein_sql() -> str:
-    h = (
-        "CAST(concat('0x', substr(md5(concat('lev:', "
-        "CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)"
-    )
+    h = md5_tag_sql("lev:", "doc_id")
     return f"""
 WITH variants AS (
   SELECT doc_id + 200000 AS doc_id,
@@ -7298,24 +7246,8 @@ def triangle_count(spark, sf_dir):
 
 
 def _triangle_sql() -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt "
-        f"WHERE doc_id % {_PR_DANGLE_MOD} <> 3"
-        for j in range(3)
-    )
     return f"""
-WITH cnt AS (SELECT count(*) AS n FROM documents),
-cand AS ({cand}),
-ue AS (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM cand WHERE dst <> src
-),
+WITH {_md5_links_sql('pr', True, ue='ue')},
 tri AS (
   SELECT e1.u AS x, e1.v AS y, e2.v AS z
   FROM ue e1
@@ -7386,8 +7318,7 @@ def domain_cap_sample(spark, sf_dir):
 DOMAIN_CAP_SQL = f"""
 WITH d AS (
   SELECT concat(source, '.',
-           CASE CAST(concat('0x', substr(md5(concat('tld:', source)), 1, 15))
-                     AS BIGINT) % 3
+           CASE {md5_long_sql("concat('tld:', source)")} % 3
              WHEN 0 THEN 'com' WHEN 1 THEN 'org' ELSE 'net' END) AS domain,
          doc_id, n_chars
   FROM documents
@@ -7446,8 +7377,7 @@ def weighted_sample(spark, sf_dir):
 WEIGHTED_SAMPLE_SQL = f"""
 SELECT doc_id,
        greatest(CAST(n_chars AS BIGINT), 1) AS wt,
-       CAST(concat('0x', substr(md5(concat('ws:', CAST(doc_id AS VARCHAR))),
-                   1, 15)) AS BIGINT)
+       {md5_tag_sql('ws:', 'doc_id')}
          // greatest(CAST(n_chars AS BIGINT), 1) AS priority
 FROM documents
 ORDER BY priority, doc_id
@@ -7790,7 +7720,6 @@ def fuzzy_join_shingles(spark, sf_dir):
 
 
 def _fuzzy_join_sql() -> str:
-    h = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
     plen = (
         f"sz - (({FUZZY_TAU_NUM} * sz + {FUZZY_TAU_DEN - 1}) "
         f"// {FUZZY_TAU_DEN}) + 1"
@@ -7801,14 +7730,12 @@ def _fuzzy_join_sql() -> str:
   SELECT {idc}, tok FROM (
     SELECT {idc}, tok,
       row_number() OVER (PARTITION BY {idc}
-                         ORDER BY {h.format(x='tok')}, tok) AS rn,
+                         ORDER BY {md5_long_sql('tok')}, tok) AS rn,
       count(*) OVER (PARTITION BY {idc}) AS sz
     FROM {src}
   ) WHERE rn <= {plen}"""
 
-    drop_h = h.format(
-        x="concat('fj:drop:', CAST(doc_id AS VARCHAR), ':', tok)"
-    )
+    drop_h = md5_long_sql("concat('fj:drop:', CAST(doc_id AS VARCHAR), ':', tok)")
     probe_src = f"({_shingle_sql(3)} WHERE doc_id % 7 = 0)"
     return f"""
 WITH lsh AS ({_shingle_sql(3)}),
@@ -7898,26 +7825,12 @@ def k_core(spark, sf_dir, k: int = KCORE_K):
 
 
 def _k_core_sql(k: int = KCORE_K) -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt "
-        f"WHERE doc_id % {_PR_DANGLE_MOD} <> 3"
-        for j in range(3)
-    )
     # every e{r} is referenced three times by round r+1 (FROM + the two
     # IN probes via d{r}); DuckDB inlines plain CTEs, which would expand
     # the 8-round unroll exponentially — MATERIALIZED pins each round to
     # one evaluation.
     parts = [
-        f"WITH cnt AS (SELECT count(*) AS n FROM documents), "
-        f"cand AS ({cand}), "
-        "e0 AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS u, "
-        "greatest(src, dst) AS v FROM cand WHERE dst <> src)"
+        f"WITH {_md5_links_sql('pr', True, ue='e0')}"
     ]
     for r in range(_KCORE_MAX_ROUNDS):
         parts.append(
@@ -8237,10 +8150,8 @@ def interval_overlap_join(spark, sf_dir):
 
 def _ovl_sql() -> str:
     def h(tag: str) -> str:
-        return (
-            f"CAST(concat('0x', substr(md5(concat('{tag}', "
-            f"CAST(doc_id AS VARCHAR), ':', CAST(j AS VARCHAR))), 1, 15)) "
-            f"AS BIGINT)"
+        return md5_long_sql(
+            f"concat('{tag}', CAST(doc_id AS VARCHAR), ':', CAST(j AS VARCHAR))"
         )
 
     return f"""
@@ -8334,9 +8245,9 @@ def _phash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             hashes = []
             for doc_id in pdf["doc_id"]:
                 d = int(doc_id)
-                h = _md5_int15("ph:" + str(d % _PHASH_GROUPS))
+                h = md5_long_py("ph:" + str(d % _PHASH_GROUPS))
                 if (d // _PHASH_GROUPS) % 2 == 1:
-                    h ^= 1 << (_md5_int15("phb:" + str(d)) % _PHASH_BITS)
+                    h ^= 1 << (md5_long_py("phb:" + str(d)) % _PHASH_BITS)
                 hashes.append(h)
         yield pd.DataFrame(
             {
@@ -8401,15 +8312,8 @@ def multimodal_phash_dedup(spark, sf_dir):
 
 
 def _phash_sql() -> str:
-    base = (
-        "CAST(concat('0x', substr(md5(concat('ph:', "
-        f"CAST(doc_id % {_PHASH_GROUPS} AS VARCHAR))), 1, 15)) AS BIGINT)"
-    )
-    flipbit = (
-        "CAST(concat('0x', substr(md5(concat('phb:', "
-        "CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) "
-        f"% {_PHASH_BITS}"
-    )
+    base = md5_tag_sql("ph:", f"doc_id % {_PHASH_GROUPS}")
+    flipbit = f"{md5_tag_sql('phb:', 'doc_id')} % {_PHASH_BITS}"
     return f"""
 WITH ph AS (
   SELECT doc_id,
@@ -8507,24 +8411,13 @@ def hits_scores(spark, sf_dir, n_iters: int = _HITS_ITERS):
 
 
 def _hits_sql(n_iters: int = _HITS_ITERS) -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('ht{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt"
-        for j in range(3)
-    )
     norm = (
         f"CAST(coalesce(raw, 0) * {_HITS_SCALE} "
         "// greatest(tot, 1) AS BIGINT)"
     )
     parts = [
-        "WITH cnt AS (SELECT count(*) AS n FROM documents), "
-        f"cand AS ({cand}), "
-        "edges AS (SELECT DISTINCT src, dst FROM cand WHERE dst <> src), "
+        f"WITH {_md5_links_sql('ht', False)}, "
+        "edges AS (SELECT DISTINCT src, dst FROM cand), "
         f"h0 AS (SELECT doc_id AS id, CAST({_HITS_SCALE} AS BIGINT) AS h "
         "FROM documents)"
     ]
@@ -8623,10 +8516,7 @@ def pareto_frontier(spark, sf_dir):
 
 def _pareto_sql() -> str:
     def h(tag: str) -> str:
-        return (
-            f"CAST(concat('0x', substr(md5(concat('{tag}', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 1000"
-        )
+        return f"{md5_tag_sql(tag, 'doc_id')} % 1000"
 
     return f"""
 WITH pts AS (
@@ -8671,11 +8561,16 @@ ML_QUERIES["pareto_frontier"] = (pareto_frontier, _pareto_sql())
 
 _THREAD_MAX_ROUNDS = 12
 
-_THREAD_PARENT_EXPR = (
-    "CASE WHEN doc_id % 7 = 0 OR doc_id <= 0 THEN doc_id "
-    "ELSE CAST(conv(substring(md5(concat('th:', CAST(doc_id AS STRING))), "
-    "1, 15), 16, 10) AS BIGINT) % greatest(doc_id, CAST(1 AS BIGINT)) END"
-)
+
+def _thread_parent_sql(dialect: str) -> str:
+    return (
+        "CASE WHEN doc_id % 7 = 0 OR doc_id <= 0 THEN doc_id "
+        f"ELSE {md5_tag_sql('th:', 'doc_id', dialect)} "
+        "% greatest(doc_id, CAST(1 AS BIGINT)) END"
+    )
+
+
+_THREAD_PARENT_EXPR = _thread_parent_sql("spark")
 
 
 def thread_roots(spark, sf_dir):
@@ -8718,15 +8613,10 @@ def thread_roots(spark, sf_dir):
 
 
 def _thread_roots_sql() -> str:
-    parent = (
-        "CASE WHEN doc_id % 7 = 0 OR doc_id <= 0 THEN doc_id "
-        "ELSE CAST(concat('0x', substr(md5(concat('th:', "
-        "CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) "
-        "% greatest(doc_id, 1) END"
-    )
     return f"""
 WITH RECURSIVE nodes AS (
-  SELECT doc_id AS id, CAST({parent} AS BIGINT) AS parent FROM documents
+  SELECT doc_id AS id, CAST({_thread_parent_sql("duckdb")} AS BIGINT) AS parent
+  FROM documents
 ),
 walk AS (
   SELECT id, id AS cur, CAST(0 AS BIGINT) AS depth FROM nodes
@@ -9140,10 +9030,7 @@ def isotonic_calibrate(spark, sf_dir):
 
 def _isotonic_sql() -> str:
     def h(tag: str) -> str:
-        return (
-            f"CAST(concat('0x', substr(md5(concat('{tag}', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)"
-        )
+        return md5_tag_sql(tag, "doc_id")
 
     L = "len(r.S)"
     viol = (
@@ -9268,21 +9155,9 @@ def bfs_levels(spark, sf_dir):
 
 
 def _bfs_sql() -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt "
-        f"WHERE doc_id % {_PR_DANGLE_MOD} <> 3"
-        for j in range(3)
-    )
     return f"""
-WITH RECURSIVE cnt AS (SELECT count(*) AS n FROM documents),
-cand AS ({cand}),
-dir AS (SELECT DISTINCT src, dst FROM cand WHERE dst <> src),
+WITH RECURSIVE {_md5_links_sql('pr', True)},
+dir AS (SELECT DISTINCT src, dst FROM cand),
 edges AS (
   SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v FROM dir
 ),
@@ -9416,9 +9291,9 @@ pos AS (
 ),
 cuts AS (
   SELECT doc_id, text, i FROM pos
-  WHERE CAST(concat('0x', substr(md5(
-          substr(text, CAST(i AS INT) - {_CDC_WIN} + 1, {_CDC_WIN})
-        ), 1, 15)) AS BIGINT) % {_CDC_MOD} = 0
+  WHERE {md5_long_sql(
+          f"substr(text, CAST(i AS INT) - {_CDC_WIN} + 1, {_CDC_WIN})")}
+        % {_CDC_MOD} = 0
      OR i = length(text)
 ),
 bounds AS (
@@ -9551,8 +9426,7 @@ def _hll_sql() -> str:
     return f"""
 WITH h AS (
   SELECT l_returnflag,
-         CAST(concat('0x', substr(md5(concat('hll:',
-           CAST(l_orderkey AS VARCHAR))), 1, 15)) AS BIGINT) AS hv
+         {md5_tag_sql('hll:', 'l_orderkey')} AS hv
   FROM lineitem
 ),
 reg AS (
@@ -9677,8 +9551,8 @@ def cms_heavy_hitters(spark, sf_dir):
 def _cms_sql() -> str:
     js = ",".join(str(j) for j in range(_CMS_D))
     hj = (
-        "CAST(concat('0x', substr(md5(concat('cms' || CAST(j AS VARCHAR) "
-        f"|| ':', bg)), 1, 15)) AS BIGINT) % {_CMS_W}"
+        md5_long_sql("concat('cms' || CAST(j AS VARCHAR) || ':', bg)")
+        + f" % {_CMS_W}"
     )
     return f"""
 WITH tk AS (SELECT string_split(lower(text), ' ') AS ts FROM documents),
@@ -10071,8 +9945,8 @@ WITH counts AS (
 noisy AS (
   SELECT lang, n,
          CAST(len(list_filter({arr}, x -> x <=
-           CAST(concat('0x', substr(md5(concat('dp:{_DP_RELEASE}:', lang)),
-                1, 15)) AS BIGINT))) AS BIGINT) - {_DP_K} AS noise
+           {md5_long_sql(f"concat('dp:{_DP_RELEASE}:', lang)")}))
+           AS BIGINT) - {_DP_K} AS noise
   FROM counts
 )
 SELECT lang, greatest(CAST(0 AS BIGINT), n + noise) AS released
@@ -10513,22 +10387,8 @@ def graph_components_lss(spark, sf_dir):
 
 
 def _graph_components_sql() -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt "
-        f"WHERE doc_id % {_PR_DANGLE_MOD} <> 3"
-        for j in range(3)
-    )
     parts = [
-        f"WITH cnt AS (SELECT count(*) AS n FROM documents), "
-        f"cand AS ({cand}), "
-        "e0 AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS u, "
-        "greatest(src, dst) AS v FROM cand WHERE dst <> src), "
+        f"WITH {_md5_links_sql('pr', True, ue='e0')}, "
         "sym AS MATERIALIZED (SELECT u AS a, v AS b FROM e0 "
         "UNION ALL SELECT v AS a, u AS b FROM e0), "
         "c0 AS MATERIALIZED (SELECT doc_id AS id, doc_id AS comp "
@@ -10628,22 +10488,9 @@ def random_walks(spark, sf_dir, walk_len: int = _RW_LEN):
 
 
 def _random_walks_sql(walk_len: int = _RW_LEN) -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt "
-        f"WHERE doc_id % {_PR_DANGLE_MOD} <> 3"
-        for j in range(3)
-    )
     parts = [
-        f"WITH cnt AS (SELECT count(*) AS n FROM documents), "
-        f"cand AS ({cand}), "
-        "dedges AS MATERIALIZED (SELECT DISTINCT src, dst FROM cand "
-        "WHERE dst <> src), "
+        f"WITH {_md5_links_sql('pr', True)}, "
+        "dedges AS MATERIALIZED (SELECT DISTINCT src, dst FROM cand), "
         "ranked AS MATERIALIZED (SELECT src, dst, "
         "row_number() OVER (PARTITION BY src ORDER BY dst) AS rn, "
         "count(*) OVER (PARTITION BY src) AS outdeg FROM dedges), "
@@ -10655,9 +10502,7 @@ def _random_walks_sql(walk_len: int = _RW_LEN) -> str:
             f"w{s} AS MATERIALIZED ("
             f"SELECT w.walk_id, CAST({s} AS INT) AS step, r.dst AS node "
             f"FROM w{s - 1} w JOIN ranked r ON r.src = w.node "
-            f"WHERE r.rn - 1 = "
-            f"CAST(concat('0x', substr(md5(concat('rw:{s}:', "
-            f"CAST(w.walk_id AS VARCHAR))), 1, 15)) AS BIGINT) % r.outdeg)"
+            f"WHERE r.rn - 1 = {md5_tag_sql(f'rw:{s}:', 'w.walk_id')} % r.outdeg)"
         )
     union = " UNION ALL ".join(f"SELECT * FROM w{s}" for s in range(walk_len + 1))
     return ", ".join(parts) + f" {union} ORDER BY walk_id, step"
@@ -11142,24 +10987,8 @@ def clustering_coefficient(spark, sf_dir):
 
 
 def _clustering_coefficient_sql() -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt "
-        f"WHERE doc_id % {_PR_DANGLE_MOD} <> 3"
-        for j in range(3)
-    )
     return f"""
-WITH cnt AS (SELECT count(*) AS n FROM documents),
-cand AS ({cand}),
-ue AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM cand WHERE dst <> src
-),
+WITH {_md5_links_sql('pr', True, ue='ue')},
 tri AS (
   SELECT e1.u AS x, e1.v AS y, e2.v AS z
   FROM ue e1
@@ -11254,24 +11083,8 @@ def link_prediction_cn(spark, sf_dir):
 
 
 def _link_prediction_sql() -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt "
-        f"WHERE doc_id % {_PR_DANGLE_MOD} <> 3"
-        for j in range(3)
-    )
     return f"""
-WITH cnt AS (SELECT count(*) AS n FROM documents),
-cand AS ({cand}),
-ue AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM cand WHERE dst <> src
-),
+WITH {_md5_links_sql('pr', True, ue='ue')},
 nb AS MATERIALIZED (
   SELECT u AS z, v AS b FROM ue UNION ALL SELECT v AS z, u AS b FROM ue
 ),
@@ -11719,17 +11532,6 @@ def label_propagation(spark, sf_dir, n_iters: int = _LPA_ITERS):
 
 
 def _label_propagation_sql() -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt "
-        f"WHERE doc_id % {_PR_DANGLE_MOD} <> 3"
-        for j in range(3)
-    )
     rounds = []
     for i in range(1, _LPA_ITERS + 1):
         rounds.append(f"""
@@ -11751,12 +11553,7 @@ l{i} AS (
   FROM l{i - 1} l LEFT JOIN b{i} b ON b.node = l.node
 )""")
     return f"""
-WITH cnt AS (SELECT count(*) AS n FROM documents),
-cand AS ({cand}),
-ue AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM cand WHERE dst <> src
-),
+WITH {_md5_links_sql('pr', True, ue='ue')},
 nb AS MATERIALIZED (
   SELECT u AS node, v AS nbr FROM ue
   UNION ALL SELECT v AS node, u AS nbr FROM ue
@@ -11822,24 +11619,8 @@ def degree_mixing(spark, sf_dir):
 
 
 def _degree_mixing_sql() -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt "
-        f"WHERE doc_id % {_PR_DANGLE_MOD} <> 3"
-        for j in range(3)
-    )
     return f"""
-WITH cnt AS (SELECT count(*) AS n FROM documents),
-cand AS ({cand}),
-ue AS MATERIALIZED (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM cand WHERE dst <> src
-),
+WITH {_md5_links_sql('pr', True, ue='ue')},
 deg AS (
   SELECT node_id, CAST(count(*) AS BIGINT) AS d
   FROM (SELECT unnest([u, v]) AS node_id FROM ue)
@@ -12694,18 +12475,6 @@ def k_truss(spark, sf_dir, k: int = KTRUSS_K):
 
 
 def _k_truss_sql(k: int = KTRUSS_K) -> str:
-    def h(j: int) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('pr{j}:', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % n)"
-        )
-
-    cand = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {h(j)} AS dst FROM documents, cnt "
-        f"WHERE doc_id % {_PR_DANGLE_MOD} <> 3"
-        for j in range(3)
-    )
-
     def sup(r: int) -> str:
         return (
             f"s{r} AS MATERIALIZED ("
@@ -12719,10 +12488,7 @@ def _k_truss_sql(k: int = KTRUSS_K) -> str:
         )
 
     parts = [
-        f"WITH cnt AS (SELECT count(*) AS n FROM documents), "
-        f"cand AS ({cand}), "
-        "e0 AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS u, "
-        "greatest(src, dst) AS v FROM cand WHERE dst <> src)"
+        f"WITH {_md5_links_sql('pr', True, ue='e0')}"
     ]
     for r in range(_KTRUSS_ROUNDS):
         parts.append(sup(r))
@@ -12822,10 +12588,7 @@ def spatial_join_grid(spark, sf_dir):
 
 def _spatial_join_sql() -> str:
     def m(tag: str) -> str:
-        return (
-            f"(CAST(concat('0x', substr(md5(concat('{tag}', "
-            f"CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 1000000)"
-        )
+        return f"({md5_tag_sql(tag, 'doc_id')} % 1000000)"
 
     return f"""
 WITH pts AS (
@@ -13244,7 +13007,7 @@ def cooccurrence_recommend(spark, sf_dir, cap: int = COOC_USER_CAP,
     items = (
         ev.select(
             "user_id",
-            F.get_json_object("props", "$.k").cast("int").alias("item"),
+            F.get_json_object("props", "$.k").try_cast("int").alias("item"),
         )
         .where(F.col("user_id").isNotNull() & F.col("item").isNotNull())
         .distinct()
@@ -13304,11 +13067,11 @@ def cooccurrence_recommend(spark, sf_dir, cap: int = COOC_USER_CAP,
 
 _COOC_SQL = f"""
 WITH items AS (
-  SELECT DISTINCT user_id,
-         CAST(json_extract_string(props, '$.k') AS INT) AS item
-  FROM events
-  WHERE user_id IS NOT NULL
-    AND json_extract_string(props, '$.k') IS NOT NULL
+  SELECT DISTINCT user_id, item FROM (
+    SELECT user_id,
+           {try_cast_int_sql("json_extract_string(props, '$.k')")} AS item
+    FROM events)
+  WHERE user_id IS NOT NULL AND item IS NOT NULL
 ),
 kept AS (
   SELECT user_id, item FROM items
@@ -13513,9 +13276,7 @@ b AS (
               ELSE c_mktsegment END AS seg_b,
          CAST(floor(c_acctbal * 100) AS BIGINT) + (h % 21) - 10 AS bal_b
   FROM (
-    SELECT *, CAST(concat('0x',
-             substr(md5(concat('rl:', CAST(c_custkey AS VARCHAR))), 1,
-                    15)) AS BIGINT) AS h
+    SELECT *, {md5_tag_sql('rl:', 'c_custkey')} AS h
     FROM customer WHERE c_custkey % 5 <> 0)
 ),
 pairs AS (
@@ -13675,9 +13436,7 @@ def _poisson_replicates_sql(src: str, salt: str, cols: str) -> str:
              + ([{_C_LIST}])[b + 1]) % {_BOOT_P}) % 1000000 AS u
     FROM (
       SELECT {cols},
-             CAST(concat('0x', substr(md5(concat('{salt}',
-                  CAST(event_id AS VARCHAR))), 1, 15)) AS BIGINT)
-               % {_BOOT_P} AS h0
+             {md5_tag_sql(salt, 'event_id')} % {_BOOT_P} AS h0
       FROM {src})
     CROSS JOIN (SELECT unnest(range({BOOT_B})) AS b))"""
 
@@ -13920,12 +13679,8 @@ def dbscan_grid(spark, sf_dir):
 _DBSCAN_SQL = f"""
 WITH RECURSIVE pts AS (
   SELECT doc_id AS id,
-         (CAST(concat('0x', substr(md5(concat('lat:',
-            CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 1000000)
-           // {_DB_CELL} AS cx,
-         (CAST(concat('0x', substr(md5(concat('lon:',
-            CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) % 1000000)
-           // {_DB_CELL} AS cy
+         ({md5_tag_sql('lat:', 'doc_id')} % 1000000) // {_DB_CELL} AS cx,
+         ({md5_tag_sql('lon:', 'doc_id')} % 1000000) // {_DB_CELL} AS cy
   FROM documents
 ),
 cells AS (SELECT cx, cy, count(*) AS n FROM pts GROUP BY cx, cy),

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window as W
 
 from .functions import md5_long
+from .functions.hashing import md5_long_sql
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -626,7 +627,7 @@ def q_json_extract(spark, sf_dir):
     return (
         ev.select(
             "event_type",
-            F.get_json_object("props", "$.k").cast("int").alias("k"),
+            F.get_json_object("props", "$.k").try_cast("int").alias("k"),
         )
         .groupBy("event_type")
         .agg(
@@ -638,12 +639,26 @@ def q_json_extract(spark, sf_dir):
     )
 
 
-Q_JSON_SQL = """
+def try_cast_int_sql(x: str) -> str:
+    """DuckDB twin of Spark's ``try_cast(x AS INT)`` on a string: NULL
+    unless ``x`` is a signed decimal integer in INT range, padded only by
+    the ASCII control characters and spaces Spark trims. DuckDB's own
+    casts read '3.5' as 4 and '1e3' as 1000."""
+    pad = r"[\x00-\x20\x7f]"
+    return (
+        f"CASE WHEN regexp_full_match({x}, '{pad}*[+-]?[0-9]+{pad}*') "
+        f"THEN TRY_CAST(regexp_replace({x}, '{pad}', '', 'g') AS INT) END"
+    )
+
+
+Q_JSON_SQL = f"""
 SELECT event_type,
        round(avg(k), 4) AS avg_k,
        CAST(max(k) AS INT) AS max_k,
        count(*) AS n
-FROM (SELECT event_type, CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events)
+FROM (SELECT event_type,
+             {try_cast_int_sql("json_extract_string(props, '$.k')")} AS k
+      FROM events)
 GROUP BY event_type ORDER BY event_type
 """
 
@@ -1997,10 +2012,8 @@ def q_scd2_history(spark, sf_dir):
 
 def _scd2_sql() -> str:
     def h(tag: str) -> str:
-        return (
-            f"CAST(concat('0x', substr(md5(concat('{tag}:', "
-            f"CAST(c_custkey AS VARCHAR), ':', CAST(j AS VARCHAR))), 1, 15)) "
-            f"AS BIGINT)"
+        return md5_long_sql(
+            f"concat('{tag}:', CAST(c_custkey AS VARCHAR), ':', CAST(j AS VARCHAR))"
         )
 
     seglit = "[" + ", ".join(f"'{s}'" for s in SCD_SEGMENTS) + "]"
@@ -2191,10 +2204,8 @@ def q_cdc_apply(spark, sf_dir):
 
 def _cdc_apply_sql() -> str:
     def h(tag: str) -> str:
-        return (
-            f"CAST(concat('0x', substr(md5(concat('{tag}:', "
-            f"CAST(c_custkey AS VARCHAR), ':', CAST(seq AS VARCHAR))), 1, 15)) "
-            f"AS BIGINT)"
+        return md5_long_sql(
+            f"concat('{tag}:', CAST(c_custkey AS VARCHAR), ':', CAST(seq AS VARCHAR))"
         )
 
     seglit = "[" + ", ".join(f"'{s}'" for s in SCD_SEGMENTS) + "]"

@@ -191,6 +191,30 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
     )
 
 
+def _drain(
+    spark: SparkSession,
+    schema,
+    src_dir: str,
+    max_files: int,
+    process_batch,
+    checkpoint_dir: str,
+) -> None:
+    """Feed every file under ``src_dir`` (a parquet file source of
+    ``schema``, at most ``max_files`` per micro-batch) to
+    ``process_batch(df, epoch_id)``, then return (``availableNow``). The
+    checkpoint makes a rerun resume after the last committed batch."""
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def _run_streaming_span_job(
     spark: SparkSession,
     op,
@@ -206,24 +230,12 @@ def _run_streaming_span_job(
     (pipeline.read_output) upgrades it to effectively exactly-once."""
     from ..operators.munge import INPUT_SCHEMA
 
-    stream = (
-        spark.readStream.schema(INPUT_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(spans_dir)
-    )
-
     def process_batch(df: DataFrame, epoch_id: int) -> None:
         out = op(df, spark).withColumn("run_id", F.lit(f"stream-{epoch_id}"))
         out = out.withColumn("partition_id", F.spark_partition_id())
         out.write.mode("append").parquet(output_path)
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, INPUT_SCHEMA, spans_dir, 4, process_batch, checkpoint_dir)
 
 
 def run_streaming_munge(
@@ -248,10 +260,7 @@ def run_streaming_extract(
     protocol, html/pdf spans instead of OCR pages)."""
     from ..operators.extract import extract
 
-    def op(df, spark):
-        return extract(df, spark)
-
-    _run_streaming_span_job(spark, op, spans_dir, output_path, checkpoint_dir)
+    _run_streaming_span_job(spark, extract, spans_dir, output_path, checkpoint_dir)
 
 
 def dedup_stream(events: DataFrame) -> DataFrame:
@@ -358,12 +367,6 @@ def run_streaming_curate(
     from ..ml_ops import CURATE_MIN_DISTINCT_RATIO, CURATE_MIN_TOKENS
     from pyspark.sql.window import Window
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(docs_dir)
-    )
-
     def process_batch(df: DataFrame, epoch_id: int) -> None:
         n_toks = F.size(F.split(F.col("text"), " "))
         # tokens_distinct (lowercased) — the SAME expression the batch
@@ -391,13 +394,7 @@ def run_streaming_curate(
             .parquet(output_path)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, DOCS_SCHEMA, docs_dir, 2, process_batch, checkpoint_dir)
 
 
 def _read_output_or_none(spark: SparkSession, output_path: str):
@@ -474,12 +471,6 @@ def run_streaming_embedding_dedup(
     from ..functions.vectors import hyperplane_bucket
     from ..ml_ops import HYPERPLANES
 
-    stream = (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_dir)
-    )
-
     out_schema = (
         "vec_id long, bucket int, embedding array<float>, batch_id long"
     )
@@ -544,13 +535,7 @@ def run_streaming_embedding_dedup(
             .parquet(output_path)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, EMB_SCHEMA, emb_dir, 1, process_batch, checkpoint_dir)
 
 
 def read_embedding_deduped(spark: SparkSession, output_path: str) -> DataFrame:
@@ -605,12 +590,6 @@ def run_streaming_funnel(
     state_dir = f"{output_path}/stage_events"
     flags_dir = f"{output_path}/flags"
 
-    stream = (
-        spark.readStream.schema(FUNNEL_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(events_dir)
-    )
-
     def process_batch(df: DataFrame, epoch_id: int) -> None:
         new = df.where(F.col("event_type").isin(FUNNEL_STAGES)).select(
             "user_id", "event_id", "ts", "event_type"
@@ -633,13 +612,8 @@ def run_streaming_funnel(
         )
         flags.write.mode("append").parquet(flags_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, FUNNEL_EVENTS_SCHEMA, events_dir, 2, process_batch,
+           checkpoint_dir)
 
 
 def read_funnel(spark: SparkSession, output_path: str) -> DataFrame:
@@ -702,12 +676,6 @@ def run_streaming_semantic_decon(
         spark.read.schema(EMB_SCHEMA).parquet(eval_src_dir)
     ).collect()
 
-    stream = (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_dir)
-    )
-
     def process_batch(df: DataFrame, epoch_id: int) -> None:
         scored = _sdecon_score(_sdecon_quantize_train(df), eval_rows)
         (
@@ -716,13 +684,7 @@ def run_streaming_semantic_decon(
             .parquet(output_path)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, EMB_SCHEMA, emb_dir, 1, process_batch, checkpoint_dir)
 
 
 def read_semantic_decon(spark: SparkSession, output_path: str) -> DataFrame:
@@ -750,11 +712,12 @@ def run_streaming_cusum(
     daily-count state table keyed by (epoch, event_type, day); the full
     CUSUM table is then re-scored from that state with the EXACT batch
     scorer (``ml_ops.cusum_from_daily`` — shared code, not a copy) and
-    published atomically. The file-source checkpoint gives
-    at-least-once per input file; a crash between the append and the
-    checkpoint commit replays a batch with IDENTICAL partial rows, so
-    ``read_cusum`` dedupes on read by (epoch, event_type, day) — max of
-    identical counts — before summing: effectively exactly-once.
+    published atomically as a new version (``publish_cusum``). The
+    file-source checkpoint gives at-least-once per input file; a crash
+    between the append and the checkpoint commit replays a batch with
+    IDENTICAL partial rows, so the re-score dedupes by (epoch,
+    event_type, day) — max of identical counts — before summing:
+    effectively exactly-once.
 
     Scale shape: the per-batch work is one map-side-combinable groupBy
     of the micro-batch plus a re-score over the DAILY table (types x
@@ -764,16 +727,7 @@ def run_streaming_cusum(
     state — the durable state IS the partials table (the
     output-as-checkpoint pattern of run_streaming_curate).
     """
-    from ..ml_ops import cusum_from_daily
-
     partials_path = f"{output_path}/daily_partials"
-    scored_path = f"{output_path}/cusum"
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(events_dir)
-    )
 
     def process_batch(df: DataFrame, epoch_id: int) -> None:
         partial = (
@@ -787,18 +741,43 @@ def run_streaming_cusum(
             .withColumn("epoch", F.lit(epoch_id).cast("long"))
         )
         partial.write.mode("append").parquet(partials_path)
-        daily = _daily_from_partials(spark, partials_path)
-        cusum_from_daily(daily).write.mode("overwrite").parquet(
-            scored_path
-        )
+        publish_cusum(spark, output_path, epoch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(spark, EVENTS_SCHEMA, events_dir, 2, process_batch, checkpoint_dir)
+
+
+def publish_cusum(spark: SparkSession, output_path: str, epoch_id: int) -> None:
+    """Re-score the CUSUM table from the daily partials and publish it
+    as ``cusum/v=<epoch_id>``. The version becomes visible to
+    ``read_cusum`` only once its ``_SUCCESS`` marker lands, so a reader
+    never sees a half-written table: until then it reads the previous
+    version, which is kept. Older versions are then removed."""
+    from ..ml_ops import cusum_from_daily
+
+    daily = _daily_from_partials(spark, f"{output_path}/daily_partials")
+    cusum_from_daily(daily).write.mode("overwrite").parquet(
+        f"{output_path}/cusum/v={epoch_id}"
     )
-    q.awaitTermination()
+    fs, versions = _cusum_versions(spark, output_path)
+    older = [p for v, p in versions if v < epoch_id]
+    for p in older[:-1]:
+        fs.delete(p, True)
+
+
+def _cusum_versions(spark: SparkSession, output_path: str):
+    """The Hadoop FileSystem of ``cusum/`` and its ``(v, Path)`` version
+    directories in ascending ``v``."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(f"{output_path}/cusum")
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return fs, []
+    versions = []
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("v=") and name[2:].isdigit():
+            versions.append((int(name[2:]), st.getPath()))
+    return fs, sorted(versions, key=lambda vp: vp[0])
 
 
 def _daily_from_partials(spark: SparkSession, partials_path: str) -> DataFrame:
@@ -815,5 +794,11 @@ def _daily_from_partials(spark: SparkSession, partials_path: str) -> DataFrame:
 
 
 def read_cusum(spark: SparkSession, output_path: str) -> DataFrame:
-    """The current drift table as published by the last micro-batch."""
-    return spark.read.parquet(f"{output_path}/cusum")
+    """The current drift table: the highest published version that has
+    its ``_SUCCESS`` marker."""
+    fs, versions = _cusum_versions(spark, output_path)
+    jvm = spark.sparkContext._jvm
+    for _, p in reversed(versions):
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS")):
+            return spark.read.parquet(p.toString())
+    raise FileNotFoundError(f"no published CUSUM table under {output_path}/cusum")

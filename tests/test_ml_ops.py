@@ -4427,6 +4427,44 @@ def test_bootstrap_replicates_with_zero_weight_are_dropped(spark, tmp_path):
             assert "pair" in set(got.event_type)  # 31 replicates survive
 
 
+def test_json_k_casts_give_null_for_non_integers(spark, tmp_path):
+    """A props ``k`` that is not an integer string reads as NULL in both
+    engines: Spark's try_cast, and a DuckDB twin that, unlike DuckDB's
+    own casts, does not round '3.5' to 4. Padding spaces are trimmed and
+    an INT overflow is NULL in both."""
+    import json
+
+    from datamunging_spark.queries import RELATIONAL_QUERIES
+
+    ks = ["x", "", "3.5", " 7", "99999999999", " 1000 ", "1001", None]
+    extra = " ".join(
+        f"UNION ALL SELECT {2_000_000 + 10 * u + i}, TIMESTAMP '2024-01-02', "
+        f"{900_000 + u}, 'jsonk', 1.0, "
+        f"'{json.dumps({} if k is None else {'k': k})}'"
+        for u in range(2)
+        for i, k in enumerate(ks)
+    )
+    path = f"{tmp_path}/events.parquet"
+    duckdb.sql(
+        "COPY (SELECT * FROM read_parquet("
+        f"'{SF_DIR}/events.parquet') {extra}) TO '{path}'"
+    )
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    for name, (fn, sql) in (
+        ("json_extract", RELATIONAL_QUERIES["json_extract"]),
+        ("cooccurrence_recommend", ML_QUERIES["cooccurrence_recommend"]),
+    ):
+        got = fn(spark, str(tmp_path)).toPandas()
+        assert _rows(got) == _rows(con.sql(sql).df()), name
+        if name == "json_extract":
+            row = got[got.event_type == "jsonk"].iloc[0]
+            assert (row.avg_k, row.max_k, row.n) == (669.3333, 1001, 16)
+        else:  # items 1000 and 1001 belong to the two new users only
+            pair = got[(got["item"] == 1000) & (got["nbr"] == 1001)]
+            assert list(pair.cij) == [2]
+
+
 def test_text_tiling_boundaries_are_local_minima(spark):
     """Every flagged boundary must be under the threshold and strictly
     below both neighbors (sentinel at the edges)."""

@@ -716,6 +716,32 @@ def test_streaming_semantic_decon_matches_batch(spark, sf_dir, tmp_path_factory)
     assert want.contaminated.sum() > 0  # positives flowed through
 
 
+def test_read_cusum_reads_the_highest_finished_version(spark, tmp_path):
+    """read_cusum skips a higher ``v=`` directory that has no
+    ``_SUCCESS`` marker (a publish still being written), and each
+    publish removes the versions older than the previous one."""
+    import os
+
+    from datamunging_spark.streaming.jobs import publish_cusum, read_cusum
+
+    out = str(tmp_path / "out")
+    spark.createDataFrame(
+        [("a", "2024-03-01", 3, 0), ("a", "2024-03-02", 9, 0),
+         ("b", "2024-03-01", 4, 0)],
+        "event_type string, day string, cnt long, epoch long",
+    ).write.parquet(f"{out}/daily_partials")
+    for epoch in range(3):
+        publish_cusum(spark, out, epoch)
+    assert sorted(os.listdir(f"{out}/cusum")) == ["v=1", "v=2"]
+    want = sorted(map(tuple, read_cusum(spark, out).collect()))
+    assert len(want) == 3
+
+    # a later publish that has written its files but not its marker
+    spark.range(5).write.parquet(f"{out}/cusum/v=7")
+    os.remove(f"{out}/cusum/v=7/_SUCCESS")
+    assert sorted(map(tuple, read_cusum(spark, out).collect())) == want
+
+
 def test_streaming_cusum_matches_batch(spark, sf_dir, tmp_path_factory):
     """The incremental drift monitor equals the batch cusum_changepoint
     on the same events — including across a mid-stream restart and a
@@ -749,15 +775,14 @@ def test_streaming_cusum_matches_batch(spark, sf_dir, tmp_path_factory):
 
     # simulated replay: re-append one epoch's partials verbatim, then
     # re-publish the scored table the way the next batch would
-    from datamunging_spark.ml_ops import cusum_from_daily
-    from datamunging_spark.streaming.jobs import _daily_from_partials
+    from datamunging_spark.streaming.jobs import publish_cusum
 
     partials = f"{out}/daily_partials"
-    replay = spark.read.parquet(partials).where(F.col("epoch") == 0)
+    partial_rows = spark.read.parquet(partials)
+    next_epoch = partial_rows.agg(F.max("epoch")).first()[0] + 1
+    replay = partial_rows.where(F.col("epoch") == 0)
     replay.write.mode("append").parquet(partials)
-    cusum_from_daily(_daily_from_partials(spark, partials)).write.mode(
-        "overwrite"
-    ).parquet(f"{out}/cusum")
+    publish_cusum(spark, out, next_epoch)
 
     got = {
         (r.event_type, r.day): (r.cnt, r.cusum, r.flag)

@@ -642,7 +642,7 @@ def fuzz_cusum(spark, tmp: Path, rng: random.Random) -> list[str]:
     from datamunging_spark.ml_ops import cusum_from_daily
     from datamunging_spark.streaming.jobs import (
         EVENTS_SCHEMA,
-        _daily_from_partials,
+        publish_cusum,
         read_cusum,
         run_streaming_cusum,
     )
@@ -674,12 +674,12 @@ def fuzz_cusum(spark, tmp: Path, rng: random.Random) -> list[str]:
 
     # simulated replay of epoch 0's partials + re-publish
     partials = f"{out}/daily_partials"
-    replay = spark.read.parquet(partials).where(F.col("epoch") == 0)
+    partial_rows = spark.read.parquet(partials)
+    replay = partial_rows.where(F.col("epoch") == 0)
     if replay.count():
+        next_epoch = partial_rows.agg(F.max("epoch")).first()[0] + 1
         replay.write.mode("append").parquet(partials)
-        cusum_from_daily(
-            _daily_from_partials(spark, partials)
-        ).write.mode("overwrite").parquet(f"{out}/cusum")
+        publish_cusum(spark, out, next_epoch)
 
     got = {
         (r.event_type, r.day): (r.cnt, r.cusum, r.flag)
